@@ -1573,11 +1573,20 @@ def _index_meta_check(spark, path: str, meta: dict,
     """Assert the probe-side parameters equal the ones the index was
     written with (ADVICE r8: probing a banded index with different
     num_hashes/bands/k/... silently returns zero/garbage matches).
-    A missing sidecar (pre-metadata index) is tolerated; a mismatch
-    raises. Pass ``stored`` to check against an already-read sidecar
-    (cache path) instead of re-reading it from disk."""
+    A missing sidecar (pre-metadata index) is tolerated unless
+    ``meta`` carries a ``format`` marker; a mismatch raises. Pass
+    ``stored`` to check against an already-read sidecar (cache path)
+    instead of re-reading it from disk."""
     if stored is None:
         stored = _index_meta_read(spark, path)
+    if "format" in meta and (stored is not None
+                             or _path_exists(spark, path)):
+        found = (stored or {}).get("format")
+        if found != meta["format"]:
+            raise ValueError(
+                "index at %r has format %r, this code reads format "
+                "%r: rebuild it with minhash_index_write"
+                % (path, found, meta["format"]))
     if stored is None:
         return  # legacy index without a sidecar
     diffs = {k: (stored[k], v) for k, v in meta.items()
@@ -1587,6 +1596,12 @@ def _index_meta_check(spark, path: str, meta: dict,
             "index at %r was written with different parameters: %s"
             % (path, ", ".join(f"{k}: index={a!r} probe={b!r}"
                                for k, (a, b) in sorted(diffs.items()))))
+
+
+def _path_exists(spark, path: str) -> bool:
+    jp = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return bool(jp.getFileSystem(spark._jsc.hadoopConfiguration())
+                  .exists(jp))
 
 
 def fingerprint_index_write(df: SparkDF, text_col: str, id_col: str,
@@ -1807,6 +1822,14 @@ def index_compact(spark, path: str, out_path: str,
             "files_after": file_count(out_path)}
 
 
+#: ``format`` marker in a MinHash index's ``_cps_meta`` sidecar: the
+#: band-key encoding. Indexes written before the marker existed key
+#: bands on md5 hex strings, which never equal the int64 xxhash64 keys
+#: of a probe, so a sidecar without this exact marker raises instead
+#: of silently matching nothing.
+_MINHASH_INDEX_FORMAT = "band_key:xxhash64-int64"
+
+
 def _band_bucket(num_buckets: int) -> Column:
     """Bucket of a banded-index row: the nonnegative mod of its int64
     ``band_key`` (already a uniform xxhash64, r18 — no second hash).
@@ -1834,9 +1857,11 @@ def _banded_rows(df: SparkDF, text_col: str, id_col: str,
     band iff their r minhash values are equal, and any injective
     re-keying preserves that exactly; a 64-bit collision can only ADD
     a candidate, which the exact-Jaccard verify filters — output
-    unchanged algebraically (this index path always verifies;
-    ``_candidates_from_signatures`` keeps md5 keys for the
-    cross-engine-replayed raw-candidate surface)."""
+    unchanged algebraically. The DuckDB oracle keys bands on an md5
+    of the tuple instead: it replays band-TUPLE equality, not the
+    hash, so the engine's key encoding (xxhash64 here and in
+    ``_candidates_from_signatures``) is invisible to it. A persisted
+    index records its encoding in ``_MINHASH_INDEX_FORMAT``."""
     if num_hashes % bands:
         raise ValueError("num_hashes must divide evenly into bands")
     sh = shingle_table(df, text_col, id_col, k, use_chars, n)
@@ -1874,9 +1899,10 @@ def minhash_index_write(df: SparkDF, text_col: str, id_col: str,
     from .bloom import bloom_build, bloom_params
 
     spark = df.sparkSession
-    meta = {"kind": "minhash_lsh", "num_hashes": num_hashes,
-            "bands": bands, "k": k, "hash_fn": hash_fn,
-            "use_chars": use_chars, "n": n, "num_buckets": num_buckets}
+    meta = {"kind": "minhash_lsh", "format": _MINHASH_INDEX_FORMAT,
+            "num_hashes": num_hashes, "bands": bands, "k": k,
+            "hash_fn": hash_fn, "use_chars": use_chars, "n": n,
+            "num_buckets": num_buckets}
     if mode == "append":
         _index_meta_check(spark, path, meta)
     from pyspark import StorageLevel
@@ -2015,7 +2041,8 @@ def minhash_dedup_incremental(spark, batch: SparkDF, path: str,
     from .bloom import bloom_build, bloom_probe
 
     probe_meta = {
-        "kind": "minhash_lsh", "num_hashes": num_hashes,
+        "kind": "minhash_lsh", "format": _MINHASH_INDEX_FORMAT,
+        "num_hashes": num_hashes,
         "bands": bands, "k": k, "hash_fn": hash_fn,
         "use_chars": use_chars, "n": n, "num_buckets": num_buckets}
     if cache is not None:

@@ -13,6 +13,7 @@ filter with ``re`` on the driver (file listing only — never data).
 from __future__ import annotations
 
 import glob as _glob
+import json
 import os
 import re
 
@@ -69,51 +70,193 @@ def _expand_regex_path(path: str) -> list[str] | str:
     return matches
 
 
-def _ns_read_schema(first_file: str):
-    """(spark_schema, ns_cols) for a file containing TIMESTAMP(NANOS)
-    columns — Spark 4 rejects those at scan inference
-    (PARQUET_TYPE_ILLEGAL) while Arrow/DuckDB read them natively.
+# footer key under which Spark stores the writing DataFrame's schema;
+# Spark's own inference prefers it over the parquet types
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+#: glob syntax; globs are left to Spark
+_GLOB = re.compile(r"[*?\[\]{}]")
 
-    Fix is PER-READ, not global: build an explicit read schema from
-    the parquet footer with the ns columns typed ``long`` (Spark's
-    reader accepts TIMESTAMP(NANOS)->LongType when the schema is
-    user-supplied), then rebuild proper timestamps with
-    ``timestamp_micros(ns div 1000)`` — all JVM-side. No session conf
-    (``spark.sql.legacy.parquet.nanosAsLong``) is touched, so
-    unrelated ``spark.read.parquet`` calls in the same session keep
-    their normal loud-error behavior instead of silently returning
-    bigints. Returns (None, []) when the file has no ns columns.
-    """
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_type
-    from pyspark.sql.types import LongType, StructField, StructType
 
+def _hidden(name: str) -> bool:
+    """Spark's listing skips these names (HadoopFSUtils)."""
+    return ((name.startswith("_") and "=" not in name)
+            or name.startswith(".") or name.endswith("._COPYING_"))
+
+
+def _data_file(path: str) -> str | None:
+    """Absolute path of the first data file (in path order, as Spark
+    lists them for inference) of a local file or flat directory. None
+    when only Spark can tell: non-local paths, globs, hidden names,
+    directories with a subdirectory (``partition_by`` layouts carry
+    partition columns in directory names), a ``_metadata`` summary or
+    no data file."""
+    if "://" in path or path.startswith("file:") or _GLOB.search(path):
+        return None
+    path = os.path.abspath(path)
+    if _hidden(os.path.basename(path)):
+        return None
+    if os.path.isfile(path):
+        return path
+    first = None
     try:
-        schema = pq.read_schema(first_file)
-    except Exception:
-        return None, []
-    ns_cols = [f.name for f in schema
-               if pa.types.is_timestamp(f.type) and f.type.unit == "ns"]
-    if not ns_cols:
-        return None, []
-    fields = []
-    for f in schema:
-        if f.name in ns_cols:
-            fields.append(StructField(f.name, LongType(), f.nullable))
-        else:
-            fields.append(StructField(f.name, from_arrow_type(f.type),
-                                      f.nullable))
-    return StructType(fields), ns_cols
+        with os.scandir(path) as it:
+            for e in it:
+                if e.name.startswith(("_metadata", "_common_metadata")):
+                    return None
+                if _hidden(e.name):
+                    continue
+                if e.is_dir():
+                    return None
+                if first is None or e.name < first:
+                    first = e.name
+    except OSError:
+        return None
+    return os.path.join(path, first) if first else None
 
 
 def _first_parquet_file(path: str) -> str:
+    """Some file of ``path`` (a file, directory or glob) whose footer
+    can tell whether it has TIMESTAMP(NANOS) columns."""
     if os.path.isdir(path):
         for f in sorted(os.listdir(path)):
             if f.endswith(".parquet"):
                 return os.path.join(path, f)
     matched = sorted(_glob.glob(path))
     return matched[0] if matched else path
+
+
+def _arrow_to_spark(t, col, binary_as_string: bool, infer_ntz: bool):
+    """Spark type for a flat column with arrow type ``t`` and parquet
+    column ``col``, matching Spark's inference; ``"ns"`` for
+    TIMESTAMP(NANOS); None off the allow-list."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    logical = col.logical_type.type
+    if pa.types.is_timestamp(t):
+        # unit and UTC flag from the parquet type, which Spark reads:
+        # the arrow type may restore the writer's unit (format 2.4
+        # stores ``timestamp[ns]`` as MICROS; INT96 reads as ns)
+        if col.physical_type != "INT64" or logical != "TIMESTAMP":
+            return None
+        ts = json.loads(col.logical_type.to_json())
+        if ts["timeUnit"] == "nanoseconds":
+            return "ns"
+        if ts["isAdjustedToUTC"] or not infer_ntz:
+            return T.TimestampType()
+        return T.TimestampNTZType()
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return T.StringType() if logical == "STRING" else None
+    if pa.types.is_binary(t):
+        if logical != "NONE":  # ENUM/JSON/BSON annotations
+            return None
+        return T.StringType() if binary_as_string else T.BinaryType()
+    if pa.types.is_decimal128(t):
+        return (T.DecimalType(t.precision, t.scale)
+                if logical == "DECIMAL" else None)
+    if pa.types.is_date32(t):
+        return T.DateType() if logical == "DATE" else None
+    simple = {pa.bool_(): T.BooleanType(), pa.int8(): T.ByteType(),
+              pa.int16(): T.ShortType(), pa.int32(): T.IntegerType(),
+              pa.int64(): T.LongType(), pa.float32(): T.FloatType(),
+              pa.float64(): T.DoubleType()}
+    return simple.get(t)
+
+
+def _off_list_type(t):
+    """Spark type for an off-list arrow type in a TIMESTAMP(NANOS)
+    read schema: Spark's inference for unsigned ints and durations
+    (pyspark's ``from_arrow_type`` rejects or misreads them), else
+    ``from_arrow_type``; None when neither maps it."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    inferred = {pa.uint8(): T.ShortType(), pa.uint16(): T.IntegerType(),
+                pa.uint32(): T.LongType(), pa.uint64(): T.DecimalType(20, 0)}
+    if t in inferred:
+        return inferred[t]
+    if pa.types.is_duration(t):
+        return T.LongType()
+    try:
+        return from_arrow_type(t)
+    except Exception:
+        return None
+
+
+def _footer_schema(file: str, binary_as_string: bool, infer_ntz: bool):
+    """(StructType, ns_cols, exact) for ``file`` from one footer read
+    and no Spark job; None when the footer is unreadable or neither
+    case below applies.
+
+    exact: the footer is on the allow-list (see :func:`read_parquet`)
+    and the schema is the one Spark's inference yields.
+    TIMESTAMP(NANOS) columns, which Spark 4 rejects at inference
+    (PARQUET_TYPE_ILLEGAL), are typed ``long`` (Spark's reader
+    accepts that pairing for a user-supplied schema) and listed in
+    ns_cols for :func:`_scan` to rebuild, JVM-side and per read: no
+    session conf is touched. A footer off the allow-list yields a
+    schema only when it has such columns, since inference cannot read
+    it at all: the other off-list fields then take
+    :func:`_off_list_type` and exact is False."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    try:
+        md = pq.read_metadata(file)
+    except Exception:
+        return None
+    spark_json = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    ns_cols, exact = [], True
+    if spark_json is not None:
+        try:
+            schema = StructType.fromJson(json.loads(spark_json))
+        except Exception:
+            return None
+    else:
+        # top-level flat columns by name; nested ones are off the list
+        cols = {}
+        for i in range(md.num_columns):
+            col = md.schema.column(i)
+            if col.max_repetition_level == 0:
+                cols.setdefault(col.path, col)
+        fields = []
+        for a in md.schema.to_arrow_schema():
+            col = cols.get(a.name)
+            t = (None if col is None else
+                 _arrow_to_spark(a.type, col, binary_as_string, infer_ntz))
+            if t == "ns":
+                ns_cols.append(a.name)
+                t = LongType()
+            elif t is None:
+                exact = False
+                t = _off_list_type(a.type)
+                if t is None:
+                    return None
+            fields.append(StructField(a.name, t, True))
+        if not (exact or ns_cols):
+            return None
+        schema = StructType(fields)
+    if len({n.lower() for n in schema.names}) != len(schema.names):
+        return None  # case-colliding names: leave the error to Spark
+    return schema, ns_cols, exact
+
+
+def _scan(spark: SparkSession, paths: list[str], footer, merge_schema=False):
+    """Spark scan of ``paths``: with ``footer`` = (schema, ns_cols) an
+    explicit-schema read that runs no job, else Spark's inference."""
+    if footer is None:
+        reader = spark.read
+        if merge_schema:
+            reader = reader.option("mergeSchema", "true")
+        return reader.parquet(*paths)
+    schema, ns_cols = footer
+    sdf = spark.read.schema(schema).parquet(*paths)
+    if ns_cols:
+        sdf = sdf.withColumns(
+            {c: F.expr(f"timestamp_micros(`{c}` div 1000)")
+             for c in ns_cols})
+    return sdf
 
 
 def read_parquet(
@@ -127,6 +270,44 @@ def read_parquet(
     Catalyst prunes columns and pushes predicates into the scan, the
     single biggest win over the reference at 100 TB, SURVEY §4.1).
 
+    Zero-job fast path: like the reference (src/partition.cpp:763-767)
+    the schema comes from the parquet footer on the driver: one footer
+    read per path with pyarrow, then an explicit-schema scan, so the
+    call lists files and plans without running a Spark job. The schema
+    is the one Spark's inference would give: the footer's Spark schema
+    (``org.apache.spark.sql.parquet.row.metadata``) when the file was
+    written by Spark, else the footer's arrow fields mapped over an
+    allow-list: signed ints, float/double, bool, string/large_string,
+    binary, date32, decimal128, and INT64 timestamps (UTC-adjusted ->
+    TIMESTAMP, tz-less -> TIMESTAMP_NTZ then cast to TIMESTAMP,
+    NANOS -> rebuilt from the raw long), honouring the session's
+    ``binaryAsString`` and ``inferTimestampNTZ`` parquet confs.
+    Everything else falls back to Spark's inference, one job per call:
+
+    - INT96 timestamps without a Spark schema in the footer, unsigned
+      ints, float16, time, duration, large_binary, fixed-size binary,
+      decimal256, dictionary, list, struct and map columns, and
+      annotated binary (ENUM/JSON/BSON);
+    - case-colliding column names;
+    - unreadable or missing files, non-local (``scheme://`` or
+      ``file:``) paths, globs, hidden names;
+    - directories with a subdirectory (``partition_by`` layouts), a
+      ``_metadata``/``_common_metadata`` summary, or no data file;
+    - ``merge_schema=True``.
+
+    Spark's inference rejects TIMESTAMP(NANOS) (PARQUET_TYPE_ILLEGAL),
+    so a path whose footer has such columns never falls back to it:
+    off the allow-list, with ``merge_schema=True``, through a glob or
+    a ``file:`` URI, the read takes an explicit schema from the first
+    ``.parquet`` file's footer, with the other off-list columns typed
+    by pyspark's ``from_arrow_type`` (and ``merge_schema`` ignored).
+
+    Multi-path reads use the schema of the first data file in path
+    order, as inference does, except when a path carries
+    TIMESTAMP(NANOS) columns and the footers differ: then each path is
+    read on its own and the parts are unioned by name (missing columns
+    read as null).
+
     ``merge_schema``: reconcile EVOLVED schemas across files (a table
     appended to for months grows columns): Spark unions every file
     footer's fields; files missing a column read it as null. Off by
@@ -139,50 +320,39 @@ def read_parquet(
         path = _expand_regex_path(path)
     paths = [path] if isinstance(path, str) else list(path)
 
-    # sniff every path's first file (not just the first path's): a
-    # multi-path read where only a later path carries ns columns must
-    # still get the explicit schema.
-    ns_schema, ns_cols = None, []
-    if len(paths) == 1:
-        ns_schema, ns_cols = _ns_read_schema(_first_parquet_file(paths[0]))
+    conf = spark.conf
+    binary_as_string = conf.get(
+        "spark.sql.parquet.binaryAsString", "false") == "true"
+    infer_ntz = conf.get(
+        "spark.sql.parquet.inferTimestampNTZ.enabled", "true") == "true"
+    files, footers = [], []
+    for p in paths:
+        f = _data_file(p)
+        footer = _footer_schema(f or _first_parquet_file(p),
+                                binary_as_string, infer_ntz)
+        if footer is not None:
+            schema, ns_cols, exact = footer
+            # inference must read the same footer, and cannot read ns
+            fast = exact and f is not None and not merge_schema
+            footer = (schema, ns_cols) if fast or ns_cols else None
+        files.append(f)
+        footers.append(footer)
+    if any(f is not None and f[1] for f in footers) and any(
+            f != footers[0] for f in footers[1:]):
+        # one read schema cannot cover paths whose footers differ
+        # when one of them needs the ns rebuild
+        parts = [ntz_to_ltz(_scan(spark, [p], f))
+                 for p, f in zip(paths, footers)]
+        sdf = parts[0]
+        for q in parts[1:]:
+            sdf = sdf.unionByName(q, allowMissingColumns=True)
+    elif footers and None not in footers:
+        # inference reads the first data file in path order (equal
+        # footers when a path needs the ns rebuild)
+        first = files.index(min(files)) if None not in files else 0
+        sdf = _scan(spark, paths, footers[first])
     else:
-        sniffs = [_ns_read_schema(_first_parquet_file(p)) for p in paths]
-        if any(s[1] for s in sniffs):
-            # one explicit read schema is only safe when every path's
-            # footer agrees (a path with a different column set — or
-            # the same column at micros — would mis-scan through a
-            # foreign schema). Verify; fall back to per-path reads
-            # unioned by name when footers differ.
-            import pyarrow.parquet as pq
-
-            try:
-                footers = [pq.read_schema(_first_parquet_file(p))
-                           for p in paths]
-                homogeneous = all(
-                    f.equals(footers[0], check_metadata=False)
-                    for f in footers[1:])
-            except Exception:
-                homogeneous = False
-            if homogeneous:
-                ns_schema, ns_cols = next(s for s in sniffs if s[1])
-            else:
-                parts = [read_parquet(spark, p).sdf for p in paths]
-                out = parts[0]
-                for q in parts[1:]:
-                    out = out.unionByName(q, allowMissingColumns=True)
-                if columns:
-                    out = out.select(*columns)
-                return DataFrame(out)
-    reader = spark.read
-    if merge_schema and not ns_cols:
-        reader = reader.option("mergeSchema", "true")
-    if ns_cols:
-        reader = reader.schema(ns_schema)
-    sdf = reader.parquet(*paths)
-    for c in ns_cols:
-        if c in sdf.columns:
-            sdf = sdf.withColumn(
-                c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
+        sdf = _scan(spark, paths, None, merge_schema)
     # Spark 4 infers tz-less parquet timestamps as TIMESTAMP_NTZ,
     # which watermarks/unix_micros reject; normalize at ingest
     # (lossless under the UTC session tz — timestamps.py).

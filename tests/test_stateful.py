@@ -536,3 +536,41 @@ def test_minhash_incremental_cache_invalidated_by_external_writer(
     handle = cache.get("bloom_handle")
     if handle is not None:
         handle.unpersist()
+
+
+def test_minhash_index_rejects_unversioned_meta(spark, tmp_path):
+    """An index whose sidecar lacks the band-key format marker (md5-hex
+    keys, written before the marker) or names another format must
+    fail loudly on probe and on append: its keys never equal the int64
+    xxhash64 keys this code computes, so it would match nothing."""
+    from charmpandas_spark.functions.dedup import (
+        _index_meta_read, _index_meta_write, minhash_dedup_incremental,
+        minhash_index_write)
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog again")],
+        "doc_id long, text string")
+    idx = str(tmp_path / "idx_old")
+    minhash_index_write(docs, "text", "doc_id", idx, num_buckets=8)
+    meta = _index_meta_read(spark, idx)
+    assert "format" in meta
+
+    def probe():
+        return minhash_dedup_incremental(spark, docs, idx, "text",
+                                         "doc_id", num_buckets=8)
+
+    def append():
+        minhash_index_write(docs, "text", "doc_id", idx, num_buckets=8,
+                            mode="append")
+
+    old = {k: v for k, v in meta.items() if k != "format"}
+    for stale in (old, dict(old, format="band_key:md5-hex")):
+        _index_meta_write(spark, idx, stale)
+        for call in (probe, append):
+            with pytest.raises(ValueError, match="format"):
+                call()
+    # an index with no sidecar at all predates the marker as well
+    import shutil
+    shutil.rmtree(str(tmp_path / "idx_old" / "_cps_meta"))
+    with pytest.raises(ValueError, match="format"):
+        probe()
