@@ -48,7 +48,8 @@ class LocalCluster:
 
     def build(self) -> SparkSession:
         import os
-        n = self.n_workers or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        n = self.n_workers or int(os.environ.get("SPARK_GRAFT_CPUS")
+                                  or os.cpu_count() or 1)
         return get_spark(master=f"local[{n}]",
                          shuffle_partitions=n * self.odf)
 

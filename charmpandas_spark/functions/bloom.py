@@ -115,49 +115,52 @@ def bloom_probe(df: SparkDF, col: str, bloom: SparkDF, m_bits: int,
     preserve row multiplicity and arbitrary schemas (maps included).
     With ``broadcast_bloom=False`` (a filter too big to broadcast)
     the classic shape runs with a shuffle join."""
+    # internal column names no column of ``df`` can collide with
+    t = "__cps_"
+    while any(c.startswith(t) for c in df.columns):
+        t = "_" + t
     if broadcast_bloom and wide_rows:
         out = df
         hits = []
         for i in range(k):
-            p, w, m, b = (f"__cps_p{i}", f"__cps_w{i}",
-                          f"__cps_m{i}", f"__cps_b{i}")
-            bl = bloom.alias(f"__cps_bl{i}")
+            p, w, m, b = (f"{t}p{i}", f"{t}w{i}", f"{t}m{i}", f"{t}b{i}")
+            bl = f"{t}bl{i}"
             out = (out.withColumn(p, F.pmod(F.xxhash64(F.col(col),
                                                        F.lit(i)),
                                             F.lit(m_bits)))
                       .withColumn(w, (F.col(p) / 64).cast("long"))
                       .withColumn(m, F.expr(
                           f"shiftleft(1L, cast(pmod({p}, 64) as int))"))
-                      .join(F.broadcast(bl),
-                            F.col(w) == F.col(f"__cps_bl{i}.word"),
-                            "left")
-                      .withColumn(b, F.col(f"__cps_bl{i}.bits"))
-                      .drop(F.col(f"__cps_bl{i}.word"))
-                      .drop(F.col(f"__cps_bl{i}.bits")))
+                      .join(F.broadcast(bloom.alias(bl)),
+                            F.col(w) == F.col(f"{bl}.word"), "left")
+                      .withColumn(b, F.col(f"{bl}.bits"))
+                      .drop(F.col(f"{bl}.word"))
+                      .drop(F.col(f"{bl}.bits")))
             hits.append(F.col(b).isNotNull()
                         & (F.col(b).bitwiseAND(F.col(m)) != 0))
         might = hits[0]
         for h in hits[1:]:
             might = might & h
-        drop = [f"__cps_{x}{i}" for i in range(k) for x in "pwmb"]
+        drop = [f"{t}{x}{i}" for i in range(k) for x in "pwmb"]
         return out.withColumn(out_col, might).drop(*drop)
-    tagged = (df.withColumn("__cps_rid", F.monotonically_increasing_id())
-                .withColumn("__cps_row", F.struct(*df.columns))
-                .withColumn("__p",
+    rid, row, pos, mask = f"{t}rid", f"{t}row", f"{t}p", f"{t}m"
+    tagged = (df.withColumn(rid, F.monotonically_increasing_id())
+                .withColumn(row, F.struct(*df.columns))
+                .withColumn(pos,
                             F.explode(_positions(F.col(col),
                                                  m_bits, k)))
-                .select("__cps_rid", "__cps_row",
-                        (F.col("__p") / 64).cast("long").alias("word"),
-                        F.expr("shiftleft(1L, cast(pmod(__p, 64) "
-                               "as int))").alias("__m")))
+                .select(rid, row,
+                        (F.col(pos) / 64).cast("long").alias("word"),
+                        F.expr(f"shiftleft(1L, cast(pmod({pos}, 64) "
+                               "as int))").alias(mask)))
     hit = (F.col("bits").isNotNull()
-           & (F.col("bits").bitwiseAND(F.col("__m")) != 0))
+           & (F.col("bits").bitwiseAND(F.col(mask)) != 0))
     b = F.broadcast(bloom) if broadcast_bloom else bloom
     out = (tagged.join(b, "word", "left")
-                 .groupBy("__cps_rid")
-                 .agg(F.first("__cps_row").alias("__cps_row"),
+                 .groupBy(rid)
+                 .agg(F.first(row).alias(row),
                       F.every(hit).alias(out_col)))
-    return out.select(*[F.col(f"__cps_row.{c}").alias(c)
+    return out.select(*[F.col(f"{row}.{c}").alias(c)
                         for c in df.columns], out_col)
 
 

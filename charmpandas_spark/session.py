@@ -9,18 +9,46 @@ dynamic allocation replaces rescale, and Arrow-accelerated
 ``toPandas`` replaces the Arrow-IPC CCS fetch path
 (src/serialize.hpp:10-47).
 
-Scale notes (100 TB target):
+Session notes:
 - AQE on: runtime partition coalescing + skew-join splitting means the
   static ``spark.sql.shuffle.partitions`` only needs to be an upper
-  bound; at cluster scale set it ~2-3x total cores and let AQE coalesce.
-- ``maxPartitionBytes`` 128m keeps scan tasks memory-bounded regardless
-  of input size.
+  bound; on a cluster set it ~2-3x total cores and let AQE coalesce.
+- ``maxPartitionBytes`` 128m keeps scan tasks memory-bounded.
 - Arrow batch transfer for every Python<->JVM hop.
+
+Start-up (class-data sharing): when ``get_spark`` launches a local
+driver JVM itself, it starts that JVM from a JDK dynamic AppCDS
+archive, so the ~11k Spark/Scala classes a session loads are mapped
+from one file instead of parsed and verified from the jars. The
+archive lives in ``$XDG_CACHE_HOME/charmpandas_spark/`` (else
+``~/.cache/charmpandas_spark/``), one ``spark-<key>.jsa`` per JDK and
+Spark jar set. The first session without one has the JVM dump the
+classes it loaded when it exits (``-XX:ArchiveClassesAtExit``); an
+``atexit`` hook waits for that dump and renames it into place, so
+the one-off cost (10-20 s) lands at interpreter exit, not in any
+query. Later sessions map it with ``-Xshare:auto``: a stale, foreign
+or corrupt archive falls back to a normal start. The JVM refuses an
+archive when a non-empty directory is on the classpath, and Spark
+puts its conf dir there, so the launch points ``SPARK_CONF_DIR`` at
+an empty directory in the cache -- only when the effective conf dir
+holds nothing but ``*.template`` files, which Spark never reads.
+CDS is skipped (a plain launch) for a non-local master, an already
+running gateway (``spark-submit``, a second session), a conf dir
+with real files, ``HADOOP_CONF_DIR``/``YARN_CONF_DIR`` set, or a
+cache directory that cannot be written. Deleting the directory
+resets it.
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+from typing import NamedTuple
 
 from pyspark.sql import SparkSession
 
@@ -72,6 +100,99 @@ DEFAULT_CONF = {
 }
 
 
+#: head of a JDK dynamic CDS archive (CDS_DYNAMIC_ARCHIVE_MAGIC
+#: 0xf00baba8, little-endian); a file without it is rebuilt
+_CDS_MAGIC = (0xf00baba8).to_bytes(4, "little")
+#: the longest interpreter exit waits for the JVM to dump a new archive
+_CDS_DUMP_WAIT_S = 120
+#: the dump warns once per signed or unloadable class, on stdout
+_CDS_QUIET = "-Xlog:cds=off"
+
+
+class _CdsLaunch(NamedTuple):
+    java_opts: str
+    conf_dir: str        # empty directory the launch uses as SPARK_CONF_DIR
+    archive: str
+    dump: str | None     # temp file this launch dumps to, None when mapping
+
+
+def _is_archive(path: str) -> bool:
+    try:
+        with open(path, "rb") as f:
+            return f.read(4) == _CDS_MAGIC
+    except OSError:
+        return False
+
+
+def _cds_launch(master: str) -> _CdsLaunch | None:
+    """How to start the driver JVM from a CDS archive, or None for a
+    plain launch (see the module docstring for when)."""
+    from pyspark import SparkContext
+    from pyspark.find_spark_home import _find_spark_home
+
+    if (not master.startswith("local")
+            or SparkContext._gateway is not None
+            or "PYSPARK_GATEWAY_PORT" in os.environ
+            or os.environ.get("HADOOP_CONF_DIR")
+            or os.environ.get("YARN_CONF_DIR")):
+        return None
+    try:
+        home = _find_spark_home()
+        spark_conf = (os.environ.get("SPARK_CONF_DIR")
+                      or os.path.join(home, "conf"))
+        if os.path.isdir(spark_conf) and not all(
+                n.endswith(".template") for n in os.listdir(spark_conf)):
+            return None
+        jars = sorted(glob.glob(os.path.join(home, "jars", "*.jar")))
+        java = (os.path.join(os.environ["JAVA_HOME"], "bin", "java")
+                if os.environ.get("JAVA_HOME") else shutil.which("java"))
+        if not jars or not java:
+            return None
+        key = hashlib.sha256()
+        for p in [os.path.realpath(java)] + jars:
+            st = os.stat(p)
+            key.update(f"{p}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+        cache = os.path.join(os.environ.get("XDG_CACHE_HOME")
+                             or os.path.expanduser("~/.cache"),
+                             "charmpandas_spark")
+        # the paths go into a java options string, which splits on
+        # whitespace and strips quotes
+        if any(c.isspace() or c in "\"'\\" for c in cache):
+            return None
+        conf_dir = os.path.join(cache, "conf")
+        os.makedirs(conf_dir, exist_ok=True)
+        if os.listdir(conf_dir) or not os.access(cache, os.W_OK):
+            return None
+    except OSError:
+        return None
+    archive = os.path.join(cache, f"spark-{key.hexdigest()[:20]}.jsa")
+    if _is_archive(archive):
+        return _CdsLaunch(f"-XX:SharedArchiveFile={archive} -Xshare:auto "
+                          f"{_CDS_QUIET}", conf_dir, archive, None)
+    dump = f"{archive}.{os.getpid()}.tmp"
+    return _CdsLaunch(f"-XX:ArchiveClassesAtExit={dump} {_CDS_QUIET}",
+                      conf_dir, archive, dump)
+
+
+def _install_archive(proc, dump: str, archive: str) -> None:
+    """At interpreter exit: end the driver JVM (it exits when its stdin
+    closes), wait for it to write ``dump``, and move that into place."""
+    try:
+        if proc is not None and proc.poll() is None:
+            proc.stdin.close()
+            proc.wait(timeout=_CDS_DUMP_WAIT_S)
+        if _is_archive(dump):
+            os.replace(dump, archive)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        proc.wait()
+    except OSError:
+        pass
+    finally:
+        with contextlib.suppress(OSError):
+            os.remove(dump)
+
+
 def get_spark(
     app_name: str = "charmpandas-spark",
     master: str | None = None,
@@ -80,11 +201,17 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default
-    32) when no cluster master is configured; on a real cluster pass
-    ``None`` with a pre-set master URL and only the SQL conf applies.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, else
+    ``local[<host cores>]``, and ``shuffle_partitions`` to the same
+    core count; on a real cluster pass a cluster master and only the
+    SQL conf applies. A call that launches a local driver JVM starts
+    it from the class-data-sharing archive described in the module
+    docstring.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from pyspark import SparkContext
+
+    host_cpus = os.cpu_count() or 1
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(host_cpus)
     builder = SparkSession.builder.appName(app_name)
     if master is None:
         master = f"local[{cpus}]"
@@ -100,13 +227,30 @@ def get_spark(
         conf["spark.driver.memory"] = os.environ.get(
             "SPARK_GRAFT_DRIVER_MEM", "24g")
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else host_cpus
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)
+    cds = _cds_launch(master)
+    if cds:
+        # defaultJavaOptions go in front of the caller's extraJavaOptions
+        key = "spark.driver.defaultJavaOptions"
+        conf[key] = " ".join(filter(None, [cds.java_opts, conf.get(key)]))
     for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    saved_conf_dir = os.environ.get("SPARK_CONF_DIR")
+    if cds:
+        os.environ["SPARK_CONF_DIR"] = cds.conf_dir
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if cds:
+            os.environ.pop("SPARK_CONF_DIR")
+            if saved_conf_dir is not None:
+                os.environ["SPARK_CONF_DIR"] = saved_conf_dir
+    if cds and cds.dump:
+        atexit.register(_install_archive, SparkContext._gateway.proc,
+                        cds.dump, cds.archive)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
@@ -115,14 +259,14 @@ def tiny_df(spark, data, schema):
     """A driver-built small-relation DataFrame in ONE partition.
 
     ``spark.createDataFrame(local_list)`` parallelizes over
-    ``sc.defaultParallelism`` python partitions (32 on the test
-    host), so even a ONE-ROW broadcast codebook pays ~32
-    python-worker round trips every time its subplan is evaluated —
-    measured at ~0.35 s extra per broadcast consumption warm on
-    ``local[32]`` (r13). ``parallelize(data, 1)`` makes it one
+    ``sc.defaultParallelism`` python partitions (one per core of a
+    ``local[n]`` master), so even a ONE-ROW broadcast codebook pays
+    ~n python-worker round trips every time its subplan is
+    evaluated — measured at ~0.35 s extra per broadcast consumption
+    warm on ``local[32]`` (r13). ``parallelize(data, 1)`` makes it one
     partition / one round trip. Use for every driver-built small
     relation (codebooks, k-means centers, PSL tables, blocklists);
-    NEVER fix this with ``coalesce(1)``, which evaluates the 32
+    NEVER fix this with ``coalesce(1)``, which evaluates the n
     python partitions sequentially instead (see SCALING.md)."""
     return spark.createDataFrame(
         spark.sparkContext.parallelize(data, 1), schema)

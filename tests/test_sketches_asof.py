@@ -481,6 +481,34 @@ def test_bloom_probe_wide_rows_path_matches_classic_paths(spark):
     assert "BroadcastHashJoin" in plan
 
 
+def test_bloom_probe_keeps_columns_named_like_its_temps(spark):
+    """The probe's internal columns must not overwrite or drop a
+    caller column of the same name, on either plan."""
+    from pyspark.sql import functions as F
+
+    from charmpandas_spark.functions.bloom import (bloom_build,
+                                                   bloom_params,
+                                                   bloom_probe)
+
+    m, k = bloom_params(50, 0.01)
+    bloom = bloom_build(spark.range(50).select(
+        F.concat(F.lit("k"), "id").alias("s")), "s", m, k)
+    probes = spark.range(0, 100, 7).select(
+        F.concat(F.lit("k"), "id").alias("s"),
+        (F.col("id") * 10).alias("__cps_p0"),
+        F.col("id").alias("__cps_rid"))
+    outs = [sorted(bloom_probe(probes, "s", bloom, m, k,
+                               wide_rows=wide).collect())
+            for wide in (False, True)]
+    assert outs[0] == outs[1]
+    assert all(r["__cps_p0"] == 10 * r["__cps_rid"] for r in outs[0])
+    assert {r["__cps_rid"] for r in outs[0]} == set(range(0, 100, 7))
+    assert all(r["might_contain"] for r in outs[0]
+               if r["__cps_rid"] < 50)
+    assert outs[0][0].__fields__ == ["s", "__cps_p0", "__cps_rid",
+                                     "might_contain"]
+
+
 def test_ivfpq_roundtrip_prunes_and_ranks_duplicate_first(
         spark, sf_dir, tmp_path):
     """IVF-PQ: the materialized codes table prunes at the directory
