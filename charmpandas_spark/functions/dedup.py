@@ -20,6 +20,10 @@ Scale design:
   identically).
 - The O(n^2) verify stage only ever runs on LSH/band candidates, not
   the corpus.
+- Every blocked pair join (MinHash bands, SimHash/dHash blocks,
+  shingle and prefix indexes, q-grams, the embedding ANN tables)
+  goes through one core, ``_blocked_pairs``: key-equality join,
+  canonical pair rule, verify before the pair dedup, one dedup.
 """
 
 from __future__ import annotations
@@ -102,6 +106,44 @@ def release(df: SparkDF) -> None:
     :class:`_CheckpointHandle`s — anything with ``unpersist()``."""
     for handle in getattr(df, "_cps_persisted", ()):
         handle.unpersist()
+
+
+def _blocked_pairs(a: SparkDF, keys: list[str], doc: str = "doc",
+                   carry: tuple[str, ...] = (), verify=None,
+                   b: SparkDF | None = None, hint: str | None = None,
+                   count: str | None = None) -> SparkDF:
+    """The partition -> prune -> verify core every blocked similarity
+    join shares: rows ``(doc, *keys, *carry)`` meet their block mates
+    in one equi-join on ``keys``, each pair once.
+
+    - Pair rule: without ``b`` (self mode) a pair is ``a.doc <
+      b.doc``; with ``b`` (cross mode) it is one row of ``a`` by one
+      row of ``b``, and an id present on both sides pairs with itself.
+    - Output: ``<doc>_a``, ``<doc>_b`` and each carried column as
+      ``<col>_a``/``<col>_b``.
+    - ``verify`` (``DataFrame -> DataFrame``) runs on the join output
+      BEFORE the dedup exchange, so it can read only carried columns;
+      it filters and projects the pair rows down to the dedup key.
+      A pair sharing several blocks is verified once per block; the
+      rows it keeps must be a function of the pair, so the copies
+      are identical and the dedup leaves one.
+    - Dedup: ``distinct``, or with ``count`` a group-by that counts
+      the blocks each pair shares into that column.
+    ``hint`` is a join-strategy hint on the ``b`` side."""
+    right = a if b is None else b
+    if hint:
+        right = right.hint(hint)
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    if b is None:
+        on.append(F.col(f"a.{doc}") < F.col(f"b.{doc}"))
+    pairs = a.alias("a").join(right.alias("b"), on=on).select(
+        *[F.col(f"{s}.{c}").alias(f"{c}_{s}")
+          for s in "ab" for c in (doc, *carry)])
+    if verify is not None:
+        pairs = verify(pairs)
+    if count is None:
+        return pairs.distinct()
+    return pairs.groupBy(*pairs.columns).agg(F.count(F.lit(1)).alias(count))
 
 
 class _CheckpointHandle:
@@ -212,8 +254,8 @@ def hash64_sql(expr: str, seed: str = "0") -> str:
 def exact_dedup(df: SparkDF, text_col: str, id_col: str) -> SparkDF:
     """Keep the lowest-id row per identical (normalized) text.
 
-    One shuffle: window by fingerprint + row_number. At 100 TB the
-    fingerprint groupBy distributes by hash; no driver involvement.
+    One shuffle: window by fingerprint + row_number. The window
+    partitions by the fingerprint hash; nothing reaches the driver.
     """
     w = Window.partitionBy("__cps_fp").orderBy(F.col(id_col).asc())
     return (df.withColumn("__cps_fp", fingerprint(text_col))
@@ -296,13 +338,28 @@ def ngram_jaccard_pairs(
     gut the similarity itself, not trim stop phrases — ``"auto"``
     resolves to None for ``use_chars=True``; pass an int to force.
     """
+    base, inv = _shingle_index(df, text_col, id_col, n, use_chars, k,
+                               max_df)
+    out = _index_jaccard(inv, None, threshold)
+    out._cps_persisted = [base]  # see release()
+    return out
+
+
+def _shingle_index(df: SparkDF, text_col: str, id_col: str, n: int,
+                   use_chars: bool, k: int, max_df: int | str | None):
+    """``(base, inv)`` of the exact n-gram Jaccard joins: ``base`` is
+    the PERSISTED ``(doc, sh, sz)`` shingle table (the caller owns its
+    release), ``inv`` the inverted index ``(doc, sz, shingle)`` with
+    stop-shingles above ``max_df`` dropped."""
     from pyspark import StorageLevel
 
     if max_df == "auto" and use_chars:
         max_df = None  # char k-grams: df cap would gut the similarity
-
-    # persist the shingle projection: both sides of the inverted-index
-    # self-join read it, so the normalize+transform runs once.
+    # persist the shingle ARRAYS before fanning out: sz and the explode
+    # both reference ``sh``, and CollapseProject would inline the whole
+    # shingle transform into each (2x the normalize+transform per row
+    # — r4: this, not join fan-out, was most of the 69 s sf1
+    # contamination probe).
     base = (shingle_table(df, text_col, id_col, k, use_chars, n)
             .withColumn("sz", F.size("sh"))
             .persist(StorageLevel.MEMORY_AND_DISK))
@@ -312,7 +369,7 @@ def ngram_jaccard_pairs(
         # self-join back: joining the index with a derivative of
         # itself trips Spark's ambiguous-self-join resolution). The
         # window shuffles on shingle — the exact partitioning the
-        # self-join below needs anyway.
+        # index join needs anyway.
         w = Window.partitionBy("shingle")
         inv = inv.withColumn("__cps_df", F.count(F.lit(1)).over(w))
         if max_df == "auto":
@@ -322,41 +379,43 @@ def ngram_jaccard_pairs(
         else:
             inv = inv.filter(F.col("__cps_df") <= max_df)
         inv = inv.drop("__cps_df")
-    # Never broadcast an inverted index: Catalyst's size estimate
-    # predates the explode, so the 64 MB dim-table broadcast threshold
-    # happily ships millions of (doc, shingle) rows to the driver —
-    # fine-ish on local[32], a driver OOM on a cluster. The shuffle
-    # hint also reuses the max_df window's hash partitioning on
-    # shingle when the guard is on.
-    a, b = inv.alias("a"), inv.hint("shuffle_hash").alias("b")
-    # Lossless length-band filter (AllPairs/PPJoin): J(A,B) >= t
-    # forces t*|A| <= |B| and t*|B| <= |A|, so mismatched-size pairs
-    # are cut AT THE JOIN — before they ever reach the (a, b)
-    # aggregation shuffle. Integer form with T = floor(t * 1e6)
-    # keeps a (possibly strict) superset, so the final jaccard
-    # filter sees every qualifying pair (r9: same bound the prefix
-    # join uses, now on the exact inverted-index paths too).
-    join_on = [F.col("a.shingle") == F.col("b.shingle"),
-               F.col("a.doc") < F.col("b.doc")]
-    if threshold > 0:
-        t_micro = int(threshold * 1_000_000)
-        join_on += [
-            F.col("b.sz") * 1_000_000 >= F.col("a.sz") * t_micro,
-            F.col("a.sz") * 1_000_000 >= F.col("b.sz") * t_micro,
-        ]
-    pairs = (a.join(b, on=join_on)
-              .groupBy(F.col("a.doc").alias("doc_a"),
-                       F.col("b.doc").alias("doc_b"),
-                       F.col("a.sz").alias("sz_a"),
-                       F.col("b.sz").alias("sz_b"))
-              .agg(F.count(F.lit(1)).alias("common")))
+    return base, inv
+
+
+def _index_jaccard(inv_a: SparkDF, inv_b: SparkDF | None,
+                   threshold: float) -> SparkDF:
+    """(doc_a, doc_b, jaccard >= threshold) from inverted indexes:
+    within ``inv_a`` (``inv_b`` None) or across the two. The shared
+    shingle count per pair comes out of the join's pair dedup.
+
+    Never broadcast an inverted index: Catalyst's size estimate
+    predates the explode, so the 64 MB broadcast threshold happily
+    ships millions of (doc, shingle) rows to the driver (r4: 70 of
+    the 80 s the sf1 contamination probe cost; a driver OOM on a
+    cluster). The ``shuffle_hash`` hint keeps the join a shuffle on
+    the shingle key and reuses the max_df window's partitioning.
+
+    Lossless length band (AllPairs/PPJoin): J(A,B) >= t forces
+    t*|A| <= |B| and t*|B| <= |A|, so size-incompatible pairs are cut
+    on the join output, before the (a, b) aggregation shuffle.
+    Integer form with T = floor(t * 1e6) keeps a (possibly strict)
+    superset, so the final jaccard filter sees every qualifying
+    pair."""
+    t_micro = int(threshold * 1_000_000)
+
+    def band(p):
+        return p.where(
+            (F.col("sz_b") * 1_000_000 >= F.col("sz_a") * t_micro)
+            & (F.col("sz_a") * 1_000_000 >= F.col("sz_b") * t_micro))
+
+    pairs = _blocked_pairs(inv_a, ["shingle"], carry=("sz",),
+                           verify=band if threshold > 0 else None,
+                           b=inv_b, hint="shuffle_hash", count="common")
     jacc = (F.col("common")
             / (F.col("sz_a") + F.col("sz_b") - F.col("common")))
-    out = (pairs.withColumn("jaccard", F.floor(jacc * 10000) / 10000)
-                .filter(F.col("jaccard") >= threshold)
-                .select("doc_a", "doc_b", "jaccard"))
-    out._cps_persisted = [base]  # see release()
-    return out
+    return (pairs.withColumn("jaccard", F.floor(jacc * 10000) / 10000)
+                 .filter(F.col("jaccard") >= threshold)
+                 .select("doc_a", "doc_b", "jaccard"))
 
 
 def cross_corpus_pairs(
@@ -389,50 +448,12 @@ def cross_corpus_pairs(
     the 80 s the sf1 contamination probe used to cost; at real scale
     it's a driver OOM). A shuffle on the shingle key is the only
     join shape that survives two large corpora."""
-    from pyspark import StorageLevel
-
-    def _inv(df, side):
-        # persist the shingle ARRAYS before fanning out: sz and the
-        # explode both reference ``sh``, and CollapseProject would
-        # inline the whole shingle transform into each (2x the
-        # normalize+transform per row — r4: this, not join fan-out,
-        # was most of the 69 s sf1 contamination probe).
-        base = (shingle_table(df, text_col, id_col, k, use_chars, n)
-                .withColumn("sz", F.size("sh"))
-                .persist(StorageLevel.MEMORY_AND_DISK))
-        inv = base.select(F.col("doc").alias(f"doc_{side}"),
-                          F.col("sz").alias(f"sz_{side}"),
-                          F.explode("sh").alias("shingle"))
-        cap = None if (max_df == "auto" and use_chars) else max_df
-        if cap is not None:
-            w = Window.partitionBy("shingle")
-            inv = inv.withColumn("__cps_df", F.count(F.lit(1)).over(w))
-            if cap == "auto":  # lazy in-plan resolution, see above
-                inv = _lazy_auto_cap(inv, df, "__cps_df")
-            else:
-                inv = inv.filter(F.col("__cps_df") <= cap)
-            inv = inv.drop("__cps_df")
-        return inv.persist(StorageLevel.MEMORY_AND_DISK), base
-
-    (inv_a, base_a), (inv_b, base_b) = _inv(df_a, "a"), _inv(df_b, "b")
-    joined = inv_a.join(inv_b.hint("shuffle_hash"), "shingle")
-    if threshold > 0:
-        # same lossless length band as ngram_jaccard_pairs: cut
-        # size-incompatible pairs before the (a, b) aggregation
-        # shuffle (the bipartite join output is the cost driver in
-        # the contamination / incremental-minhash truth sets).
-        t_micro = int(threshold * 1_000_000)
-        joined = joined.where(
-            (F.col("sz_b") * 1_000_000 >= F.col("sz_a") * t_micro)
-            & (F.col("sz_a") * 1_000_000 >= F.col("sz_b") * t_micro))
-    pairs = (joined.groupBy("doc_a", "doc_b", "sz_a", "sz_b")
-                   .agg(F.count(F.lit(1)).alias("common")))
-    jacc = (F.col("common")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("common")))
-    out = (pairs.withColumn("jaccard", F.floor(jacc * 10000) / 10000)
-                .filter(F.col("jaccard") >= threshold)
-                .select("doc_a", "doc_b", "jaccard"))
-    out._cps_persisted = [inv_a, inv_b, base_a, base_b]  # see release()
+    base_a, inv_a = _shingle_index(df_a, text_col, id_col, n, use_chars,
+                                   k, max_df)
+    base_b, inv_b = _shingle_index(df_b, text_col, id_col, n, use_chars,
+                                   k, max_df)
+    out = _index_jaccard(inv_a, inv_b, threshold)
+    out._cps_persisted = [base_a, base_b]  # see release()
     return out
 
 
@@ -569,30 +590,51 @@ def lsh_candidate_pairs(
     """Candidate near-dup pairs: split the signature into ``bands``
     equal rows-per-band chunks; docs agreeing on any full band meet in
     a bucket join. Classic (b, r) S-curve selectivity."""
-    if num_hashes % bands:
-        raise ValueError("num_hashes must divide evenly into bands")
     sig = minhash_signatures(df, text_col, id_col, num_hashes, k,
                              hash_fn, use_chars, n)
     return _candidates_from_signatures(sig, num_hashes, bands)
 
 
-def _candidates_from_signatures(sig: SparkDF, num_hashes: int,
-                                bands: int) -> SparkDF:
+def _band_keys(sig: SparkDF, num_hashes: int, bands: int) -> SparkDF:
+    """(doc, band_idx, band_key): one row per (doc, band) — the band
+    keys of the batch LSH candidates and of the banded index alike.
+
+    ``band_key`` is an INT64 ``xxhash64`` of the band's minhash tuple
+    (r18; guide §2.3 "narrower types"), not the former 32-char md5
+    hex string: every downstream use — the index's on-disk band
+    column, the bloom words, the band-equality join — keys on it, so
+    the long halves-plus the key bytes on every exchange and write
+    and drops two md5 evaluations per band row (the hex digest and
+    the md5-derived bucket). Candidate-set identity: two docs share a
+    band iff their r minhash values are equal, and any injective
+    re-keying preserves that exactly; a 64-bit collision can only ADD
+    a candidate, which the exact-Jaccard verify filters — output
+    unchanged algebraically. The DuckDB oracle keys bands on an md5
+    of the tuple instead: it replays band-TUPLE equality, not the
+    hash, so the engine's key encoding is invisible to it."""
+    if num_hashes % bands:
+        raise ValueError("num_hashes must divide evenly into bands")
     r = num_hashes // bands
     band_keys = [
         F.xxhash64(*[F.col(f"m{b * r + i}") for i in range(r)])
          .alias(f"bk{b}")
         for b in range(bands)
     ]
-    banded = sig.select("doc", F.posexplode(F.array(
-        *[bk for bk in band_keys])).alias("band_idx", "band_key"))
-    a, b = banded.alias("a"), banded.alias("b")
-    return (a.join(b, on=[F.col("a.band_idx") == F.col("b.band_idx"),
-                          F.col("a.band_key") == F.col("b.band_key"),
-                          F.col("a.doc") < F.col("b.doc")])
-             .select(F.col("a.doc").alias("doc_a"),
-                     F.col("b.doc").alias("doc_b"))
-             .distinct())
+    return sig.select("doc", F.posexplode(F.array(*band_keys))
+                      .alias("band_idx", "band_key"))
+
+
+def _candidates_from_signatures(sig: SparkDF, num_hashes: int,
+                                bands: int) -> SparkDF:
+    return _blocked_pairs(_band_keys(sig, num_hashes, bands),
+                          ["band_idx", "band_key"])
+
+
+def _array_jaccard(x: str, y: str) -> Column:
+    """Set Jaccard of two shingle-array columns, floored to 1e-4."""
+    inter = F.size(F.array_intersect(x, y))
+    union = F.size(F.array_union(x, y))
+    return F.floor(inter.cast("double") / union * 10000) / 10000
 
 
 def minhash_near_dup(
@@ -620,8 +662,6 @@ def minhash_near_dup(
     so Spark's ReusedExchange materializes each once for all branches.
     """
     est_slack = 0.2
-    if num_hashes % bands:
-        raise ValueError("num_hashes must divide evenly into bands")
     from pyspark import StorageLevel
 
     # sh and sig each feed 2-3 plan branches; persist so the expensive
@@ -651,10 +691,7 @@ def minhash_near_dup(
                     "doc_a")
               .join(sh.withColumnsRenamed({"doc": "doc_b", "sh": "sh_b"}),
                     "doc_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    jacc = inter.cast("double") / union
-    out = (joined.withColumn("jaccard", F.floor(jacc * 10000) / 10000)
+    out = (joined.withColumn("jaccard", _array_jaccard("sh_a", "sh_b"))
                  .filter(F.col("jaccard") >= threshold)
                  .select("doc_a", "doc_b", "jaccard"))
     out._cps_persisted = [sh, sig]  # see release()
@@ -821,43 +858,49 @@ def simhash_near_dup(
     ``bits/block_bits`` blocks; any pair within ``max_hamming`` must
     agree exactly on >= 1 block (when blocks > max_hamming), so
     bucket-join on block value instead of cross-joining."""
+    return _hamming_pairs(simhash(df, text_col, id_col, bits, hash_fn),
+                          [("simhash", bits)], block_bits, max_hamming)
+
+
+def _hamming_pairs(sig: SparkDF, words: list[tuple[str, int]],
+                   block_bits: int, max_hamming: int) -> SparkDF:
+    """(doc_a, doc_b, hamming) for the pairs of signature rows
+    ``(doc, *words)`` within ``max_hamming`` bits, by the pigeonhole
+    block trick: every ``(word, width)`` splits into ``width //
+    block_bits`` blocks, and a pair within ``max_hamming`` bits agrees
+    exactly on >= 1 block when there are more blocks than
+    ``max_hamming``, so candidates come from a join on
+    (block_idx, block_val), never all pairs. The XOR popcount verify
+    runs on the join output, before the pair dedup (r18): the dedup
+    exchange carries only passing pairs. Shared by SimHash text and
+    dHash image near-dup."""
+    from functools import reduce
+    from operator import add
+
     from pyspark import StorageLevel
 
-    nblocks = bits // block_bits
-    if nblocks <= max_hamming:
-        raise ValueError("need bits/block_bits > max_hamming for the "
+    if sum(width // block_bits for _, width in words) <= max_hamming:
+        raise ValueError("need more blocks than max_hamming for the "
                          "pigeonhole guarantee")
-    # the signature pipeline (explode tokens + ``bits`` conditional
-    # sums) feeds BOTH sides of the self-join below; without a pin it
-    # is recomputed per branch (measured 7.1 s vs 1.6 s for the
-    # signatures alone at sf0.1) — same fix as cosine_pairs_ann
-    sig = (simhash(df, text_col, id_col, bits, hash_fn)
-           .persist(StorageLevel.MEMORY_AND_DISK))
+    # the signature pipeline feeds BOTH sides of the self-join; without
+    # a pin it is recomputed per branch (measured 7.1 s vs 1.6 s for
+    # the simhash signatures alone at sf0.1)
+    sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
+    names = tuple(w for w, _ in words)
     mask = (1 << block_bits) - 1
     blocks = sig.select(
-        "doc", "simhash",
+        "doc", *names,
         F.posexplode(F.array(*[
-            F.shiftright("simhash", i * block_bits).bitwiseAND(F.lit(mask))
-            for i in range(nblocks)
+            F.shiftright(w, i * block_bits).bitwiseAND(F.lit(mask))
+            for w, width in words for i in range(width // block_bits)
         ])).alias("block_idx", "block_val")) \
         .persist(StorageLevel.MEMORY_AND_DISK)
-    a, b = blocks.alias("a"), blocks.alias("b")
-    # Hamming verify MAP-SIDE, distinct after (r18, guide §2.3): the
-    # XOR popcount is computed straight off the block join's output
-    # and failing pairs are dropped BEFORE the dedup exchange, so the
-    # distinct carries (doc_a, doc_b, hamming) only for passing pairs
-    # instead of every multi-block candidate with both signatures.
-    # hamming is a function of the pair, so the distinct set is
-    # unchanged.
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    out = (a.join(b, on=[F.col("a.block_idx") == F.col("b.block_idx"),
-                         F.col("a.block_val") == F.col("b.block_val"),
-                         F.col("a.doc") < F.col("b.doc")])
-            .select(F.col("a.doc").alias("doc_a"),
-                    F.col("b.doc").alias("doc_b"),
-                    ham.alias("hamming"))
-            .filter(F.col("hamming") <= max_hamming)
-            .distinct())
+    ham = reduce(add, [F.bit_count(F.col(f"{w}_a").bitwiseXOR(
+        F.col(f"{w}_b"))) for w in names]).cast("int")
+    out = _blocked_pairs(
+        blocks, ["block_idx", "block_val"], carry=names,
+        verify=lambda p: (p.select("doc_a", "doc_b", ham.alias("hamming"))
+                           .filter(F.col("hamming") <= max_hamming)))
     out._cps_persisted = [sig, blocks]  # see release()
     return out
 
@@ -1234,7 +1277,7 @@ def _jaccard_prefix_parts(
     """Shared candidate stage of the prefix-filtered AllPairs join:
     returns ``(terms, cand)`` with ``terms`` PERSISTED (the caller
     owns release) and ``cand`` carrying the two set sizes as
-    ``__sa``/``__sb`` (functionally dependent on the pair, so the
+    ``sz_a``/``sz_b`` (functionally dependent on the pair, so the
     distinct's cardinality is unchanged — r17: riding them through
     the candidate join removes the separate per-doc sizes aggregate
     AND the two pair-keyed size joins the verify stage used to pay;
@@ -1275,15 +1318,13 @@ def _jaccard_prefix_parts(
     prefix_len = (F.col("sz")
                   - F.ceil(F.lit(threshold) * F.col("sz")) + 1)
     prefix = ranked.where(F.col("__rn") <= prefix_len) \
-                   .select("doc", "term", "sz", "__rn")
-    a, b = prefix.alias("a"), prefix.alias("b")
-    conds = [F.col("a.term") == F.col("b.term"),
-             F.col("a.doc") < F.col("b.doc")]
+                   .select("doc", "term", "sz", F.col("__rn").alias("rn"))
+    conds = []
     if length_filter:
-        conds += [F.ceil(F.lit(threshold) * F.col("a.sz"))
-                  <= F.col("b.sz"),
-                  F.ceil(F.lit(threshold) * F.col("b.sz"))
-                  <= F.col("a.sz")]
+        conds += [F.ceil(F.lit(threshold) * F.col("sz_a"))
+                  <= F.col("sz_b"),
+                  F.ceil(F.lit(threshold) * F.col("sz_b"))
+                  <= F.col("sz_a")]
     if positional_filter:
         # NB: this is the per-token accumulated-overlap-1 form, not
         # PPJoin's full pair-level filter (o_p shared prefix tokens +
@@ -1298,16 +1339,18 @@ def _jaccard_prefix_parts(
         # candidates share many prefix tokens at threshold-marginal
         # similarity.
         alpha = F.ceil(F.lit(threshold / (1.0 + threshold))
-                       * (F.col("a.sz") + F.col("b.sz")))
-        ubound = F.lit(1) + F.least(F.col("a.sz") - F.col("a.__rn"),
-                                    F.col("b.sz") - F.col("b.__rn"))
+                       * (F.col("sz_a") + F.col("sz_b")))
+        ubound = F.lit(1) + F.least(F.col("sz_a") - F.col("rn_a"),
+                                    F.col("sz_b") - F.col("rn_b"))
         conds.append(ubound >= alpha)
-    cand = (a.join(b, on=conds)
-             .select(F.col("a.doc").alias("doc_a"),
-                     F.col("b.doc").alias("doc_b"),
-                     F.col("a.sz").alias("__sa"),
-                     F.col("b.sz").alias("__sb"))
-             .distinct())
+
+    def prune(p):
+        for c in conds:
+            p = p.where(c)
+        return p.select("doc_a", "doc_b", "sz_a", "sz_b")
+
+    cand = _blocked_pairs(prefix, ["term"], carry=("sz", "rn"),
+                          verify=prune)
     return terms, cand
 
 
@@ -1404,12 +1447,12 @@ def jaccard_pairs_prefix(
                            F.col("__ta") == F.col("__tb")])
                  .groupBy("doc_a", "doc_b")
                  .agg(F.count(F.lit(1)).alias("__inter"),
-                      F.first("__sa").alias("__sa"),
-                      F.first("__sb").alias("__sb")))
+                      F.first("sz_a").alias("sz_a"),
+                      F.first("sz_b").alias("sz_b")))
     out = (inter
            .withColumn("__j",
                        F.col("__inter").cast("double")
-                       / (F.col("__sa") + F.col("__sb")
+                       / (F.col("sz_a") + F.col("sz_b")
                           - F.col("__inter")).cast("double"))
            .where(F.col("__j") >= threshold)
            .select("doc_a", "doc_b",
@@ -1766,14 +1809,13 @@ def index_compact(spark, path: str, out_path: str,
     ``minhash_index_write(mode='append')`` / ``minhash_dedup_
     incremental(append_novel=True)``) adds one file per touched
     bucket plus one Bloom delta, so after N batches a probe opens
-    O(N) files per bucket and OR-merges N deltas — at 100 TB of
-    history with hourly ingestion that is the dominant probe cost
-    within a quarter. Compaction restores both to 1 WITHOUT changing
-    any probe result: same rows, same ``bucket=`` directory layout
-    (so partition pruning is untouched), and the merged word table
-    is exactly the bitwise OR the probe would have computed from the
-    deltas (no false-negative risk — the geometry in the sidecar is
-    untouched).
+    O(N) files per bucket and OR-merges N deltas, a probe cost that
+    grows with every batch ingested. Compaction restores both to 1
+    WITHOUT changing any probe result: same rows, same ``bucket=``
+    directory layout (so partition pruning is untouched), and the
+    merged word table is exactly the bitwise OR the probe would have
+    computed from the deltas (no false-negative risk — the geometry
+    in the sidecar is untouched).
 
     Copy-on-write like :func:`~charmpandas_spark.sources.parquet.
     compact_files`: Spark cannot atomically overwrite a directory it
@@ -1845,35 +1887,12 @@ def _banded_rows(df: SparkDF, text_col: str, id_col: str,
                  use_chars: bool, n: int) -> SparkDF:
     """(doc, sh, band_idx, band_key): one row per (doc, band) with
     the document's shingle set inlined — the storage/probe unit of
-    the banded LSH index.
-
-    ``band_key`` is an INT64 ``xxhash64`` of the band's minhash tuple
-    (r18; guide §2.3 "narrower types"), not the former 32-char md5
-    hex string: every downstream use — the index's on-disk band
-    column, the bloom words, the band-equality join — keys on it, so
-    the long halves-plus the key bytes on every exchange and write
-    and drops two md5 evaluations per band row (the hex digest and
-    the md5-derived bucket). Candidate-set identity: two docs share a
-    band iff their r minhash values are equal, and any injective
-    re-keying preserves that exactly; a 64-bit collision can only ADD
-    a candidate, which the exact-Jaccard verify filters — output
-    unchanged algebraically. The DuckDB oracle keys bands on an md5
-    of the tuple instead: it replays band-TUPLE equality, not the
-    hash, so the engine's key encoding (xxhash64 here and in
-    ``_candidates_from_signatures``) is invisible to it. A persisted
-    index records its encoding in ``_MINHASH_INDEX_FORMAT``."""
-    if num_hashes % bands:
-        raise ValueError("num_hashes must divide evenly into bands")
+    the banded LSH index; ``band_key`` as in :func:`_band_keys`. A
+    persisted index records the key encoding in
+    ``_MINHASH_INDEX_FORMAT``."""
     sh = shingle_table(df, text_col, id_col, k, use_chars, n)
     sig = _signatures_from_shingles(sh, num_hashes, hash_fn)
-    r = num_hashes // bands
-    band_keys = [
-        F.xxhash64(*[F.col(f"m{b * r + i}") for i in range(r)])
-         .alias(f"bk{b}")
-        for b in range(bands)
-    ]
-    banded = sig.select("doc", F.posexplode(F.array(*band_keys))
-                        .alias("band_idx", "band_key"))
+    banded = _band_keys(sig, num_hashes, bands)
     return banded.join(sh, "doc").select("doc", "sh",
                                          "band_idx", "band_key")
 
@@ -2116,9 +2135,6 @@ def minhash_dedup_incremental(spark, batch: SparkDF, path: str,
         cand = (probe_rows.join(idx.hint("shuffle_hash"),
                                 ["band_idx", "band_key", "bucket"])
                           .select("doc", "sh", "matched_doc", "__sh_h"))
-        inter = F.size(F.array_intersect("sh", "__sh_h"))
-        union = F.size(F.array_union("sh", "__sh_h"))
-        jacc = inter.cast("double") / union
         # Verify MAP-SIDE, dedup after (r18, guide §2.3 "project
         # before the exchange"): the exact-Jaccard filter and the
         # self-match guard run on the band join's output BEFORE the
@@ -2130,7 +2146,7 @@ def minhash_dedup_incremental(spark, batch: SparkDF, path: str,
         # jaccard, so the kept row is deterministic); that duplicate
         # array_intersect is noise next to shuffling the arrays.
         matches = (cand.withColumn("jaccard",
-                                   F.floor(jacc * 10000) / 10000)
+                                   _array_jaccard("sh", "__sh_h"))
                        .filter(F.col("jaccard") >= threshold)
                        # self-match guard: no-op when batch and index
                        # ids are disjoint; on crash-replay it stops a
@@ -2174,12 +2190,14 @@ def minhash_dedup_incremental(spark, batch: SparkDF, path: str,
                               "doc", "sh")
                       .persist(StorageLevel.MEMORY_AND_DISK))
         persisted.append(novel)
-        # repartition by bucket before the append (guide §6 "output
-        # file sizing"): one file per touched bucket instead of
-        # (scan tasks x buckets) small files — each later batch (and
-        # every probe of the accumulated index) opens O(buckets)
-        # files per append, not O(tasks x buckets).
-        (novel.repartition("bucket")
+        # rebalance by bucket before the append (guide §6 "output
+        # file sizing"): about one file per touched bucket instead of
+        # (scan tasks x buckets) small files, so each later probe
+        # opens O(buckets) files per append. Unlike a plain
+        # repartition, AQE splits a bucket larger than the advisory
+        # partition size across several tasks (and files), so a
+        # skewed batch does not funnel one bucket through one task.
+        (novel.hint("rebalance", "bucket")
               .write.mode("append").partitionBy("bucket").parquet(path))
         if "bloom_m" in stored:
             nb = bloom_build(novel.select("band_key"), "band_key",
@@ -2235,38 +2253,29 @@ def edit_distance_pairs(df: SparkDF, text_col: str, id_col: str,
     k = max_dist
     min_safe = q * (k + 1) + q - 1
     base = spread(df.select(F.col(id_col).alias("doc"),
-                            normalize_text(text_col).alias("__s")))
-    base = base.withColumn("__len", F.length("__s"))
-    long_side = base.where(F.col("__len") >= min_safe)
-    short_side = base.where(F.col("__len") < min_safe)
+                            normalize_text(text_col).alias("s")))
+    base = base.withColumn("len", F.length("s"))
+    long_side = base.where(F.col("len") >= min_safe)
+    short_side = base.where(F.col("len") < min_safe)
 
-    idx = F.sequence(F.lit(1), F.greatest(F.col("__len") - (q - 1),
+    idx = F.sequence(F.lit(1), F.greatest(F.col("len") - (q - 1),
                                           F.lit(1)))
     grams = (long_side
-             .select("doc", "__s", "__len",
+             .select("doc", "s", "len",
                      F.explode(F.array_distinct(F.transform(
-                         idx, lambda i: F.substring(F.col("__s"), i, q))))
+                         idx, lambda i: F.substring(F.col("s"), i, q))))
                       .alias("g")))
-    a = grams.select(F.col("doc").alias("doc_a"),
-                     F.col("__s").alias("__sa"),
-                     F.col("__len").alias("__la"),
-                     F.col("g").alias("__ga"))
-    b = grams.select(F.col("doc").alias("doc_b"),
-                     F.col("__s").alias("__sb"),
-                     F.col("__len").alias("__lb"),
-                     F.col("g").alias("__gb"))
-    cand_long = (a.join(b.hint("shuffle_hash"),
-                        on=[F.col("__ga") == F.col("__gb"),
-                            F.col("doc_a") < F.col("doc_b")])
-                  .select("doc_a", "doc_b", "__sa", "__sb",
-                          "__la", "__lb")
-                  .distinct())
+    cand_long = _blocked_pairs(
+        grams, ["g"], carry=("s", "len"), hint="shuffle_hash",
+        verify=lambda p: (p.where(F.abs(F.col("len_a") - F.col("len_b"))
+                                  <= k)
+                           .select("doc_a", "doc_b", "s_a", "s_b")))
     s = short_side.select(F.col("doc").alias("doc_s"),
-                          F.col("__s").alias("__ss"),
-                          F.col("__len").alias("__ls"))
+                          F.col("s").alias("__ss"),
+                          F.col("len").alias("__ls"))
     cand_short = (s.join(base.select(F.col("doc").alias("doc_o"),
-                                     F.col("__s").alias("__so"),
-                                     F.col("__len").alias("__lo")),
+                                     F.col("s").alias("__so"),
+                                     F.col("len").alias("__lo")),
                          on=[F.col("doc_s") != F.col("doc_o"),
                              F.abs(F.col("__ls") - F.col("__lo"))
                              <= k])
@@ -2274,17 +2283,13 @@ def edit_distance_pairs(df: SparkDF, text_col: str, id_col: str,
                            F.greatest("doc_s", "doc_o").alias("doc_b"),
                            F.when(F.col("doc_s") < F.col("doc_o"),
                                   F.col("__ss")).otherwise(F.col("__so"))
-                            .alias("__sa"),
+                            .alias("s_a"),
                            F.when(F.col("doc_s") < F.col("doc_o"),
                                   F.col("__so")).otherwise(F.col("__ss"))
-                            .alias("__sb"),
-                           F.lit(0).alias("__la"), F.lit(0).alias("__lb"))
+                            .alias("s_b"))
                    .distinct())
-    cand = cand_long.where(
-        F.abs(F.col("__la") - F.col("__lb")) <= k) \
-        .unionByName(cand_short)
-    return (cand
-            .withColumn("dist", F.levenshtein("__sa", "__sb"))
+    return (cand_long.unionByName(cand_short)
+            .withColumn("dist", F.levenshtein("s_a", "s_b"))
             .where(F.col("dist") <= k)
             .select("doc_a", "doc_b",
                     F.col("dist").cast("int").alias("dist"))

@@ -23,7 +23,7 @@ Determinism design (why every step is exact):
 - Init is the ``k`` smallest-``id`` rows; empty clusters keep their
   previous centroid.
 
-Scale (100 TB): each Lloyd iteration is ONE map-side-combined
+Plan shape: each Lloyd iteration is ONE map-side-combined
 aggregation over the corpus (the canonical distributed k-means);
 centroids (k x dim doubles) travel driver->executors as plan
 literals — the only driver-side state, k*dim*8 bytes. The quantized
@@ -57,10 +57,10 @@ def _train_sample(q: SparkDF, id_col: str, train_cap: int) -> SparkDF:
     a DETERMINISTIC, partitioning-independent, cross-engine-
     replayable training sample (DuckDB twin: ``ORDER BY md5-hash(id),
     id LIMIT cap``). ``orderBy().limit()`` plans as TakeOrdered: each
-    task keeps a cap-row heap, no global sort — the 100 TB-safe way
-    to bound codebook training at one corpus pass. The repartition
-    spreads the (single-partition) limit result back out for the
-    iterated aggregations."""
+    task keeps a cap-row heap, no global sort — one corpus pass
+    bounds codebook training. The repartition spreads the
+    (single-partition) limit result back out for the iterated
+    aggregations."""
     from .dedup import hash64
 
     return (q.orderBy(hash64(F.col(id_col).cast("string"), 0,
@@ -106,10 +106,10 @@ def kmeans_fit_predict(
     ``train_cap`` bounds TRAINING to a deterministic hash-ordered
     sample of ``min(n, train_cap)`` rows (:func:`_train_sample`);
     the final assignment still covers the full corpus in one
-    scan-local pass. At 100 TB a codebook needs ~100k training
-    vectors, not ``iters`` full-corpus passes — this is the
-    standard k-means regime (init comes from the sample too, so the
-    whole fit replays from the sample alone).
+    scan-local pass. Training then costs ``iters`` passes over the
+    sample instead of the corpus — the standard k-means regime (init
+    comes from the sample too, so the whole fit replays from the
+    sample alone).
     """
     from pyspark import StorageLevel
 
@@ -332,7 +332,7 @@ def semantic_near_dup(
     persist only adds cache-write cost. Same verdict family as
     sparse.py's no-persist decision.
     """
-    from .similarity import dot, l2_norm
+    from .similarity import _pair_cosine, l2_norm
 
     asg = kmeans_fit_predict(df, vec_col, id_col, k, iters, scale)
     tagged = df.select(F.col(id_col), F.col(vec_col)).join(asg, id_col)
@@ -347,10 +347,7 @@ def semantic_near_dup(
                       l2_norm(F.col(vec_col)).alias("__cps_nb"))
     pairs = a.join(b, (F.col("cluster") == F.col("__cps_cb"))
                    & (F.col("id_a") < F.col("id_b")))
-    na, nb = F.col("__cps_na"), F.col("__cps_nb")
-    raw = F.when((na == 0.0) | (nb == 0.0), F.lit(None)).otherwise(
-        dot(F.col("__cps_va"), F.col("__cps_vb")) / (na * nb))
-    cos = F.floor(raw * 10000) / 10000
+    cos = _pair_cosine("__cps_va", "__cps_vb", "__cps_na", "__cps_nb")
     return (pairs.select("id_a", "id_b", "cluster",
                          cos.alias("cosine"))
                  .filter(F.col("cosine") >= threshold))

@@ -10,10 +10,10 @@ as an Arrow-batched pandas UDF — the documented "UDFs are the slow
 path" escape hatch, used ONLY on post-blocking candidate pairs, never
 on the cross product.
 
-Plan shape / 100 TB story: candidates come from an equi-join on a
-blocking key (here: a cheap deterministic feature of the name), so
-the quadratic blow-up is bounded per block and the join is an
-ordinary hash shuffle AQE can split; the Python scorer then runs
+Plan shape: candidates come from an equi-join on a blocking key
+(here: a cheap deterministic feature of the name), so the quadratic
+blow-up is bounded per block and the join is an ordinary hash
+shuffle AQE can split; the Python scorer then runs
 scan-local on the (small) candidate set. This is the classic
 Fellegi-Sunter pipeline shape: block -> score -> threshold.
 

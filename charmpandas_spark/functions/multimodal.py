@@ -956,42 +956,14 @@ def dhash_near_dup(df: SparkDF, bin_col: str, id_col: str,
     Skew note: corpora with many blank/short images concentrate
     block values — AQE's skew-join split handles the hot buckets,
     same as the simhash path."""
-    from pyspark import StorageLevel
+    from .dedup import _hamming_pairs
 
-    nblocks = 64 // block_bits
     if 64 % block_bits or block_bits > 32 or 32 % block_bits:
         raise ValueError("block_bits must divide 32")
-    if nblocks <= max_hamming:
-        raise ValueError("need 64/block_bits > max_hamming for the "
-                         "pigeonhole guarantee")
-    sig = media_dhash(df, bin_col, id_col, pixels_fn, grid)         .persist(StorageLevel.MEMORY_AND_DISK)
-    mask = (1 << block_bits) - 1
-    half = 32 // block_bits
-    block_vals = [F.shiftright("dhash_lo", i * block_bits)
-                   .bitwiseAND(F.lit(mask)) for i in range(half)] +                  [F.shiftright("dhash_hi", i * block_bits)
-                   .bitwiseAND(F.lit(mask)) for i in range(half)]
-    blocks = sig.select(
-        F.col(id_col).alias("doc"), "dhash_hi", "dhash_lo",
-        F.posexplode(F.array(*block_vals))
-         .alias("block_idx", "block_val"))         .persist(StorageLevel.MEMORY_AND_DISK)
-    a, b = blocks.alias("a"), blocks.alias("b")
-    cand = (a.join(b, on=[F.col("a.block_idx") == F.col("b.block_idx"),
-                          F.col("a.block_val") == F.col("b.block_val"),
-                          F.col("a.doc") < F.col("b.doc")])
-             .select(F.col("a.doc").alias("doc_a"),
-                     F.col("b.doc").alias("doc_b"),
-                     F.col("a.dhash_hi").alias("__ha"),
-                     F.col("a.dhash_lo").alias("__la"),
-                     F.col("b.dhash_hi").alias("__hb"),
-                     F.col("b.dhash_lo").alias("__lb"))
-             .distinct())
-    ham = (F.bit_count(F.col("__ha").bitwiseXOR(F.col("__hb")))
-           + F.bit_count(F.col("__la").bitwiseXOR(F.col("__lb"))))
-    out = (cand.withColumn("hamming", ham.cast("int"))
-               .filter(F.col("hamming") <= max_hamming)
-               .select("doc_a", "doc_b", "hamming"))
-    out._cps_persisted = [sig, blocks]  # see dedup.release()
-    return out
+    sig = (media_dhash(df, bin_col, id_col, pixels_fn, grid)
+           .withColumnRenamed(id_col, "doc"))
+    return _hamming_pairs(sig, [("dhash_lo", 32), ("dhash_hi", 32)],
+                          block_bits, max_hamming)
 
 
 def attach_wav_media(df: SparkDF, text_col: str,

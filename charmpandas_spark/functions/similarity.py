@@ -7,9 +7,9 @@ Three tiers:
 - ``cosine_sim``/``dot``/``l2_norm``: Column-level kernels built from
   ``zip_with`` + ``aggregate`` — JVM-side, no UDF, exact.
 - ``cosine_topk``: brute-force top-k vs one query vector — the exact
-  baseline. One scan + a k-row ordering; at 100 TB this is a single
-  pass with partial top-k per partition (Spark's orderBy+limit
-  already computes per-partition top-k before the final merge).
+  baseline. One scan + a k-row ordering: Spark plans orderBy+limit
+  as a per-partition top-k before the final merge, so no sort of the
+  corpus.
 - ``ann_lsh_topk`` / ``knn_join_lsh``: random-hyperplane LSH scale
   path — deterministic pseudo-random planes derived from hashes, so
   results are reproducible without storing plane matrices.
@@ -62,6 +62,18 @@ def cosine_sim(a: Column, b: Column) -> Column:
         dot(a, b) / (na * nb))
 
 
+def _pair_cosine(va: str, vb: str, na: str, nb: str) -> Column:
+    """Cosine of the vector columns ``va``/``vb`` from their
+    precomputed norm columns ``na``/``nb``, floored to 1e-4; null when
+    either norm is 0. The pair operators compute norms once per row
+    below their join and score pairs with this one expression, so it
+    stays bit-identical to ``cosine_sim``'s naive formula."""
+    na, nb = F.col(na), F.col(nb)
+    cos = F.when((na == 0.0) | (nb == 0.0), F.lit(None)).otherwise(
+        dot(F.col(va), F.col(vb)) / (na * nb))
+    return F.floor(cos * 10000) / 10000
+
+
 def cosine_topk(
     df: SparkDF,
     vec_col: str,
@@ -100,14 +112,11 @@ def cosine_pairs(
                   l2_norm(F.col(vec_col)).alias("nrm"))
     a = spread(v).alias("a")
     b = v.alias("b")
-    sim = F.when((F.col("a.nrm") == 0.0) | (F.col("b.nrm") == 0.0),
-                 F.lit(None)).otherwise(
-        dot(F.col("a.vec"), F.col("b.vec"))
-        / (F.col("a.nrm") * F.col("b.nrm")))
+    cos = _pair_cosine("a.vec", "b.vec", "a.nrm", "b.nrm")
     return (a.join(b, F.col("a.id") < F.col("b.id"))
              .select(F.col("a.id").alias("id_a"),
                      F.col("b.id").alias("id_b"),
-                     (F.floor(sim * 10000) / 10000).alias("cosine"))
+                     cos.alias("cosine"))
              .filter(F.col("cosine") >= threshold))
 
 
@@ -205,57 +214,20 @@ def cosine_pairs_ann(
     caps at ``_P_MAX_AUTO`` planes (pass explicit ``num_planes`` at
     that scale).
 
-    At 100 TB: candidates scale with bucket occupancy (corpus/2^planes
-    per table), not corpus^2; the band explode is one shuffle on
-    (table, bucket) and AQE handles hot buckets. ``v`` (vec + norm)
-    and the banded index feed 3+ plan branches (candidate self-join +
-    both verify joins), so both are pinned MEMORY_AND_DISK — without
-    this every branch recomputes num_tables*num_planes 64-dim
-    projection folds per row (HOF re-evaluation, the round-3 19.9 s
-    regression). Call ``dedup.release(out)`` to free them.
+    Candidates scale with bucket occupancy (corpus/2^planes per
+    table), not corpus^2; the band explode is one shuffle on
+    (table, bucket) and AQE's skew join splits hot buckets. ``v``
+    (vec + norm) and the banded index feed 3+ plan branches
+    (candidate self-join + both verify joins), so both are pinned
+    MEMORY_AND_DISK — without this every branch recomputes
+    num_tables*num_planes 64-dim projection folds per row (HOF
+    re-evaluation, the round-3 19.9 s regression). Call
+    ``dedup.release(out)`` to free them.
     ``cosine_pairs`` is retained as this function's exact verification
     oracle (recall measurement), not a corpus path.
     """
-    from pyspark import StorageLevel
-
-    from .dedup import spread
-
-    v = spread(df.select(F.col(id_col).alias("id"),
-                         F.col(vec_col).alias("vec"),
-                         l2_norm(F.col(vec_col)).alias("nrm"))) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    buckets = hyperplane_buckets_batch(
-        None, num_tables,
-        _P_MAX_AUTO if num_planes is None else num_planes, seed)
-    # null(-element) vectors can only yield null cosine — keep them
-    # out of the index so an all-null corpus can't pile up in bucket 0
-    banded = (v.withColumn("__mv", _null_element_masked(F.col("vec")))
-               .filter(F.col("__mv").isNotNull())
-               .select("id", F.posexplode(buckets(F.col("__mv")))
-                       .alias("tbl", "bucket")))
-    if num_planes is None:
-        banded = _mask_auto_planes(banded, df)
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (a.join(b, on=[F.col("a.tbl") == F.col("b.tbl"),
-                          F.col("a.bucket") == F.col("b.bucket"),
-                          F.col("a.id") < F.col("b.id")])
-             .select(F.col("a.id").alias("id_a"),
-                     F.col("b.id").alias("id_b"))
-             .distinct())
-    va = v.select(F.col("id").alias("id_a"), F.col("vec").alias("va"),
-                  F.col("nrm").alias("na"))
-    vb = v.select(F.col("id").alias("id_b"), F.col("vec").alias("vb"),
-                  F.col("nrm").alias("nb"))
-    sim = F.when((F.col("na") == 0.0) | (F.col("nb") == 0.0),
-                 F.lit(None)).otherwise(
-        dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")))
-    out = (cand.join(va, "id_a").join(vb, "id_b")
-               .select("id_a", "id_b",
-                       (F.floor(sim * 10000) / 10000).alias("cosine"))
-               .filter(F.col("cosine") >= threshold))
-    out._cps_persisted = [v, banded]  # see dedup.release()
-    return out
+    return _cosine_pairs_ann([df], vec_col, id_col, threshold,
+                             num_tables, num_planes, seed)
 
 
 def cosine_pairs_ann_cross(
@@ -284,50 +256,57 @@ def cosine_pairs_ann_cross(
     candidates — same sub-quadratic shape and persist/release
     contract as the within-corpus path.
     """
+    return _cosine_pairs_ann([df_a, df_b], vec_col, id_col, threshold,
+                             num_tables, num_planes, seed)
+
+
+def _cosine_pairs_ann(frames: list[SparkDF], vec_col: str, id_col: str,
+                      threshold: float, num_tables: int,
+                      num_planes: int | None, seed: int) -> SparkDF:
+    """Body of :func:`cosine_pairs_ann` (one frame: pairs within it)
+    and :func:`cosine_pairs_ann_cross` (two frames: pairs across
+    them). One banded hyperplane index over the side-tagged union of
+    the frames, the (table, bucket) block join, then the exact cosine
+    for the distinct candidates only."""
+    from functools import reduce
+
     from pyspark import StorageLevel
 
-    from .dedup import spread
+    from .dedup import _blocked_pairs, spread
 
-    tag = (df_a.select(F.col(id_col).alias("id"),
-                       F.col(vec_col).alias("vec"))
-               .withColumn("side", F.lit(0))
-               .unionByName(
-                   df_b.select(F.col(id_col).alias("id"),
-                               F.col(vec_col).alias("vec"))
-                       .withColumn("side", F.lit(1))))
+    tag = reduce(SparkDF.unionByName, [
+        f.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"),
+                 F.lit(i).alias("side"))
+        for i, f in enumerate(frames)])
     v = spread(tag.withColumn("nrm", l2_norm(F.col("vec")))) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     buckets = hyperplane_buckets_batch(
         None, num_tables,
         _P_MAX_AUTO if num_planes is None else num_planes, seed)
+    # null(-element) vectors can only yield null cosine — keep them
+    # out of the index so an all-null corpus can't pile up in bucket 0
     banded = (v.withColumn("__mv", _null_element_masked(F.col("vec")))
                .filter(F.col("__mv").isNotNull())
                .select("id", "side",
                        F.posexplode(buckets(F.col("__mv")))
                        .alias("tbl", "bucket")))
     if num_planes is None:
-        # auto planes over the UNION's row count (both corpora)
+        # auto planes over the row count of all the frames together
         banded = _mask_auto_planes(banded, tag)
     banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    a = banded.filter(F.col("side") == 0).alias("a")
-    b = banded.filter(F.col("side") == 1).alias("b")
-    cand = (a.join(b, on=[F.col("a.tbl") == F.col("b.tbl"),
-                          F.col("a.bucket") == F.col("b.bucket")])
-             .select(F.col("a.id").alias("id_a"),
-                     F.col("b.id").alias("id_b"))
-             .distinct())
-    va = v.filter(F.col("side") == 0).select(
-        F.col("id").alias("id_a"), F.col("vec").alias("vcta"),
-        F.col("nrm").alias("na"))
-    vb = v.filter(F.col("side") == 1).select(
-        F.col("id").alias("id_b"), F.col("vec").alias("vctb"),
-        F.col("nrm").alias("nb"))
-    sim = F.when((F.col("na") == 0.0) | (F.col("nb") == 0.0),
-                 F.lit(None)).otherwise(
-        dot(F.col("vcta"), F.col("vctb")) / (F.col("na") * F.col("nb")))
+    side = [F.col("side") == i for i in range(len(frames))]
+    cand = _blocked_pairs(
+        banded.where(side[0]), ["tbl", "bucket"], doc="id",
+        b=banded.where(side[1]) if len(frames) > 1 else None)
+    va = v.where(side[0]).select(F.col("id").alias("id_a"),
+                                 F.col("vec").alias("va"),
+                                 F.col("nrm").alias("na"))
+    vb = v.where(side[-1]).select(F.col("id").alias("id_b"),
+                                  F.col("vec").alias("vb"),
+                                  F.col("nrm").alias("nb"))
     out = (cand.join(va, "id_a").join(vb, "id_b")
                .select("id_a", "id_b",
-                       (F.floor(sim * 10000) / 10000).alias("cosine"))
+                       _pair_cosine("va", "vb", "na", "nb").alias("cosine"))
                .filter(F.col("cosine") >= threshold))
     out._cps_persisted = [v, banded]  # see dedup.release()
     return out
@@ -402,7 +381,7 @@ def hyperplane_buckets_batch(dims: int | None, num_tables: int,
     null-element vectors to null JVM-side first, preserving the
     fold's null-propagation semantics.
 
-    At 100 TB: embarrassingly parallel per Arrow batch, no shuffle,
+    Plan: a projection per Arrow batch with no shuffle,
     ~dims x tables x planes flops/row in numpy — the classic
     "vectorized Pandas UDF beats interpreted per-row by 100x" path.
     Constructed lazily (module-level pandas_udf breaks executor
@@ -550,11 +529,8 @@ def knn_join(
                                                   num_planes, seed))
         pairs = lb.join(rb, "b").drop("b")
     pairs = pairs.filter(F.col("qid") != F.col("nid"))
-    sim = F.when((F.col("qn") == 0.0) | (F.col("nn") == 0.0),
-                 F.lit(None)).otherwise(
-        dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn")))
     scored = pairs.select(
-        "qid", "nid", (F.floor(sim * 10000) / 10000).alias("cosine"))
+        "qid", "nid", _pair_cosine("qv", "nv", "qn", "nn").alias("cosine"))
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(),
                                           F.col("nid").asc())
     return (scored.withColumn("rank", F.row_number().over(w))

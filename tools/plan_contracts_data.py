@@ -55,4 +55,19 @@ CONTRACTS = {
     # pinned AFTER the r12 fix: localCheckpoint on the edge set cut
     # the static plan from 156 inlined-lineage exchanges to 16
     "graph_triangles": (16, 2, 2),
+    # pinned at the parent of the blocked-pair refactor, before any
+    # join moved onto dedup._blocked_pairs: the larger count of the
+    # test session (sf0.001, local[8]) and a local[4] session at
+    # sf0.001 and sf0.01 (minhash_fast 21 vs 19, ngram_jaccard 9 vs
+    # 7; every other fact equal). They keep the port from adding an
+    # exchange or a nested-loop join unnoticed.
+    "dedup_minhash_fast": (21, 2, 2),
+    "dedup_minhash": (11, 0, 2),
+    "dedup_simhash_pairs": (5, 0, 2),
+    "dedup_ngram_jaccard": (9, 2, 2),
+    "dedup_contamination": (9, 2, 2),
+    "dedup_embedding_cosine_ann": (5, 0, 2),
+    "dedup_embedding_leakage": (5, 0, 2),
+    "multimodal_dhash": (1, 0, 2),
+    "dedup_editdist": (13, 1, 1),
 }
