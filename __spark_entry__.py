@@ -46,8 +46,8 @@ def _tmp_sink(name: str) -> str:
 
 def cleanup_temp_sinks(spark: SparkSession | None = None) -> None:
     """Remove this process's temp-sink dir and drop any ``cps_*``
-    memory-sink temp views. bench.py calls this between timed queries:
-    the r6 driver sweep showed the tail sink queries 4-5x slower than
+    memory-sink temp views. Call it between timed queries: the r6
+    driver sweep showed the tail sink queries 4-5x slower than
     solo, consistent with ~70 queries of /tmp parquet writes + memory
     sinks accumulating (page-cache pressure / catalog bloat)."""
     import shutil
@@ -2800,7 +2800,8 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ROUTED r15 from ``stateful.sessionize_stream``
     (applyInPandasWithState) to the JVM path on the measured A/B
-    (``SESSIONIZE_AB_r15.json``): identical closed-session tables at
+    (the round-15 sessionize A/B artifact, in git at commit 54701ba):
+    identical closed-session tables at
     sf0.1/sf1/sf5 and 2.3x/5.2x/8.2x faster drains — the Python-state
     drain was the ONE streaming path whose cost grew with data
     (e 0.65 vs 0.32). The stateful operator remains the
@@ -4022,13 +4023,15 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the rank loop keys on node id, and long keys hash/compare/ship
     fast where string keys paid codegen + UTF-8 comparisons on every
     exchange (~20% off the solo floor at sf0.1; same-host A/B
-    10.91 -> 8.45s, HOST_AB_r17.json). The DECLARED output keeps the
+    10.91 -> 8.45s in r17; ``HOST_AB_r17.json``, in git at commit
+    54701ba). The DECLARED output keeps the
     round-16 'c123'/'s45' string ids via ONE post-loop projection
     over the |nodes|-row result (VERDICT r17 #1: an optimization
     round must not change what a declared query computes; the
     relabeling is bijective by parity, so the projection is O(|nodes|)
-    and every in-loop exchange still keys on bigint — see
-    plans/r18/graph_pagerank_after.txt). A pre-union pair distinct
+    and every in-loop exchange still keys on bigint — see the r18
+    plan dump ``plans/r18/graph_pagerank_after.txt``, in git at
+    commit 54701ba). A pre-union pair distinct
     was measured and rejected in r17: pagerank's own edge distinct
     does the same dedup in one pass, and the extra exchange inlines
     per-consumer into the static plan (34 -> 62 nodes) for zero
@@ -4732,7 +4735,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # never-driver-checked queries, (2) queries changed or added this
     # round, (3) a §2 core slice re-proven every round, (4) the
     # freshest greens at the back (staleness-ascending, so each
-    # round's rotation is a pure front-slice per tools/staleness.py).
+    # round's rotation is a pure front-slice; the round-17 rotation
+    # tool is in git at commit 54701ba).
     # tools/check_correctness.py runs ALL entries locally each round
     # (ADVICE r3: never depend on the driver window size).
     return {
@@ -4741,10 +4745,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         #     (pagerank / jaccard-prefix / dsir pair / streaming
         #     neardup from r17; the banded-index funnel, bloom-
         #     probe and fusion queries from r18), then the staged
-        #     staleness-ascending next_window (BENCH_FULL r17)
-        #     fills to 50. Positions 51+ stay staleness-ascending
-        #     so the next rotation is again a pure front-slice
-        #     (tools/staleness.py). tools/check_correctness.py
+        #     staleness-ascending next_window (r17 legacy sweep,
+        #     BENCH_FULL.json at commit 54701ba) fills to 50.
+        #     Positions 51+ stay staleness-ascending so the next
+        #     rotation is again a pure front-slice.
+        #     tools/check_correctness.py
         #     runs ALL entries locally every round (ADVICE r3). ---
         "graph_pagerank": q_graph_pagerank,
         "dedup_jaccard_prefix": q_dedup_jaccard_prefix,

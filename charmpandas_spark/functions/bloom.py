@@ -28,7 +28,7 @@ Properties the tests and the correctness gate lean on:
   pytest measures FPR against disjoint probes and pins it under 2x
   the formula.
 
-100 TB shape: ``m/64`` rows is ~20 MB of longs for a 10^10-bit filter
+Plan shape: ``m/64`` rows is ~20 MB of longs for a 10^10-bit filter
 — broadcastable for filters covering billions of inserted keys, while
 the probing corpus streams through scan-local position arithmetic.
 For benchmark decontamination (10^5-10^7 n-grams) the filter is

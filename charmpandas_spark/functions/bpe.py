@@ -10,10 +10,10 @@ will produce. Two halves:
   (Sennrich et al. 2016, "Neural Machine Translation of Rare Words
   with Subword Units" — public algorithm): start from characters,
   repeatedly merge the globally most-frequent adjacent symbol pair.
-  Runs driver-side over a WORD-FREQUENCY TABLE, not the corpus: at
-  100 TB the distinct-word table after a distributed
-  ``groupBy(word).count()`` is millions of rows (megabytes), so the
-  scalable shape is: Spark aggregates frequencies (one shuffle),
+  Runs driver-side over a WORD-FREQUENCY TABLE, not the corpus: the
+  distinct-word table after a distributed ``groupBy(word).count()``
+  grows with the vocabulary, not the corpus, so the shape is: Spark
+  aggregates frequencies (one shuffle),
   driver learns merges on the capped top-``max_vocab`` table
   (``learn_bpe_from_corpus``). This mirrors how production tokenizers
   are actually trained — on aggregated counts, never row-at-a-time.
@@ -108,8 +108,9 @@ def learn_bpe_from_corpus(
     """Distributed word-frequency aggregation (one shuffle, partial
     map-side combine) + driver-side merge learning on the capped
     top-``max_vocab`` word table. The collect is bounded by
-    ``max_vocab`` rows regardless of corpus size — the 100 TB-safe
-    shape for an inherently global, iterative algorithm."""
+    ``max_vocab`` rows regardless of corpus size — the driver never
+    holds more than that for an inherently global, iterative
+    algorithm."""
     freqs = (
         df.select(F.explode(F.split(F.lower(F.col(text_col)),
                                     r"\s+")).alias("w"))

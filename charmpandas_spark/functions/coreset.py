@@ -18,7 +18,7 @@ on any partitioning, any engine. The DuckDB oracle replays the full
 greedy loop as unrolled materialized CTE chains (the kmeans-oracle
 pattern, kmeans.py:179).
 
-Scale design: with ``train_cap`` set (the documented 100 TB path),
+Scale design: with ``train_cap`` set (the path for large corpora),
 selection runs driver-side in numpy on the ``train_cap``-bounded
 sample — the collect is bounded by construction, exactly like the
 k·d center literals, and the alternative (one Spark job per greedy

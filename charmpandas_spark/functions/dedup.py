@@ -1330,7 +1330,8 @@ def _jaccard_prefix_parts(
         # PPJoin's full pair-level filter (o_p shared prefix tokens +
         # min-suffix bound after the last one, via a groupBy(pair)
         # agg in place of the distinct). The full form was built and
-        # measured in r12: on the token-suffixed bench_sf1 fixture it
+        # measured in r12: on the token-suffixed 10-copy sf1
+        # documents fixture (tests/conftest.py ``sf1_documents``) it
         # produced the IDENTICAL candidate set (687,250 pairs) while
         # paying four extra aggregates — near-dup text pairs that
         # share 2+ rare prefix shingles essentially never fail the

@@ -19,10 +19,10 @@ operator value-hash-checks against a DuckDB replay.
 
 Bounds: intermediates stay inside int64 for corpora up to ~9e12
 total n-grams per side ((n_f + 1) * 1e6 must fit). Past that, grow
-``num_buckets`` (which shrinks per-bucket counts) — at 100 TB the
-bucket table is still <= ``num_buckets`` rows and BROADCASTS.
+``num_buckets`` (which shrinks per-bucket counts) — the bucket
+table stays <= ``num_buckets`` rows and BROADCASTS.
 
-Plan shape (100 TB): explode+groupBy passes build the bucket table
+Plan shape: explode+groupBy passes build the bucket table
 (partial-aggregated, collapses to <= B rows map-side — ONE tagged
 pass in the split form, r17); the side totals Nt/Nr come from a
 single global window over that <= B-row table (one tiny
@@ -182,8 +182,8 @@ def dsir_weights_split(docs: SparkDF, is_target: Column,
     identical in both forms and the local workload is CPU-bound.
     What the split form halves is corpus SCAN volume (the two-filter
     form reads every row group twice because the side predicate is
-    not a partition key), which is the dominant term at disk-bound
-    100 TB scale — that, not local wall-time, is why the registry
+    not a partition key), which is the dominant term once the scan
+    is disk-bound — that, not local wall-time, is why the registry
     queries use it."""
     B = num_buckets
     h = hash64(F.col("__ds_t"), 0, hash_fn)

@@ -18,9 +18,8 @@ and would wrap past 2^63 — a mean in micro-units never gets there).
 
 Scale design: every encoder reduces to ONE grouped aggregation to a
 category/group-cardinality statistics table, broadcast back onto the
-data — the fact scan itself never shuffles. That is the only shape
-that survives 100 TB: the statistics table is as small as the
-category domain no matter how large the data, and the encode step
+data — the fact scan itself never shuffles. The statistics table
+is as small as the category domain whatever the data size, and the encode step
 stays scan-local (codegen'd projection after a broadcast hash join).
 """
 

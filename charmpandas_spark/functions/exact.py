@@ -10,9 +10,9 @@ sf5 lineitem slice (30M rows, 16.1M after the Q1 filter, local[32],
 persisted input so only the agg differs): double sum 0.35 s, the
 decimal(18,6) sum 1.82 s, the split-long sum below 1.1 s; end-to-end
 TPC-H Q1 from parquet dropped 5.57 s -> 2.64 s (min-of-3) when every
-measure switched.  At 100 TB the decimal buffer additionally widens
-every partial-agg shuffle row and defeats codegen'd hash-map updates,
-so the cliff grows with scale — this module is the scale path.
+measure switched.  The decimal buffer also widens every partial-agg
+shuffle row and defeats codegen'd hash-map updates, so the cliff
+grows with the shuffled rows — this module avoids both.
 
 The trick (classic fixed-point split accumulator):
 
@@ -35,8 +35,7 @@ The trick (classic fixed-point split accumulator):
 Overflow headroom (longs cap at ~9.2e18): ``|sum(hi)|`` is bounded
 by ``max_integer_part x rows_per_group`` and ``|sum(lo)|`` by
 ``10^scale x rows_per_group``.  With scale=6 and values up to 1e6
-(TPC-H prices), a single group is safe to ~9e12 rows — about 100x
-the largest group a 100 TB corpus produces under these schemas; the
+(TPC-H prices), a single group is safe to ~9e12 rows; the
 recombination in decimal(38,scale) is exact to 38 digits.  For wider
 values or bigger groups, lower ``scale`` or raise the split point —
 the two bounds trade off through the same 10^scale constant.

@@ -1,7 +1,7 @@
 """Declarative data-quality expectations — one validation pass per
 table, one result row per rule.
 
-A 100 TB ingest pipeline needs its contracts checked WITHOUT one job
+An ingest pipeline needs its contracts checked WITHOUT one job
 per rule: every row-level rule here (not_null / range / regex /
 in_set / unique) compiles into a single global aggregate over one
 scan — conditional sums ride the same partial-aggregation pass, so

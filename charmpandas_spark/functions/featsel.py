@@ -26,7 +26,7 @@ needed at tested scales). Cells whose denominator is zero (a token
 in every doc, or a label covering the whole corpus) are undefined
 and dropped via ``nullif``.
 
-Scale design (100 TB): one explode over per-document DISTINCT
+Plan shape: one explode over per-document DISTINCT
 tokens (``array_distinct`` inside the row — no extra dedup
 exchange), one (token, label) aggregation (map-side combined), the
 per-token totals as a WINDOW over that same table's token exchange

@@ -6,7 +6,7 @@ Build: cluster the corpus into ``nlist`` centroids (Spark ML KMeans,
 seeded/deterministic), assign every vector to its nearest centroid
 (the "inverted list"). Search: score the query against centroids
 only, then run the exact cosine top-k inside the ``nprobe`` closest
-lists. At 100 TB the inverted lists are written partitioned by
+lists. :func:`ivf_write` writes the inverted lists partitioned by
 centroid id, so a query reads nprobe/nlist of the data (partition
 pruning), and the centroid table (nlist x dim) broadcasts anywhere.
 """
@@ -139,8 +139,8 @@ def ivf_write(assigned, path: str, mode: str = "overwrite") -> None:
     """Materialize the inverted lists PARTITIONED BY centroid id —
     one directory per list. This is the on-disk half of the IVF
     claim: a search filtered to ``nprobe`` lists prunes whole
-    partitions at planning time, so at 100 TB a query touches
-    nprobe/nlist of the bytes no matter how big the corpus gets
+    partitions at planning time, so a query reads nprobe/nlist of
+    the bytes whatever the corpus size
     (``tests/test_sketches_asof.py::test_ivf_partitioned_scan_prunes``
     asserts the pruning from the scan node, not just argues it)."""
     assigned.write.mode(mode).partitionBy("__cps_list").parquet(path)

@@ -81,7 +81,7 @@ def ivfpq_build(df: SparkDF, vec_col: str, id_col: str,
 
     ``coarse_cap`` / ``pq_cap`` bound BOTH trainings to
     deterministic hash-ordered samples (``kmeans._train_sample``) —
-    at 100 TB each training is one bounded pass, and only the
+    each training is one bounded pass, and only the
     assignment/encoding scans touch the full corpus. The whole build
     is JOIN-FREE on the corpus: the assignment carries the quantized
     vector (``with_vector``), residuals are a scan-local projection,

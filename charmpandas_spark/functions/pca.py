@@ -3,7 +3,7 @@ INTEGER power iteration — the dimensionality-reduction primitive for
 embedding whitening, drift monitoring (project to the dominant axis,
 watch the 1-d distribution), and OPQ-style pre-rotations.
 
-Architecture (the only shape that survives 100 TB): ONE distributed
+Architecture (no data-sized state on the driver): ONE distributed
 pass computes the d² + d + 1 sufficient statistics (Σqᵢqⱼ, Σqᵢ, n)
 via an Arrow-batched ``mapInPandas`` partial-product kernel (numpy
 int64 X'X per batch, d²-row partials, grouped DECIMAL(38,0) sum);

@@ -1,8 +1,8 @@
 """Dataset profiling — the "look before you train" operators: one-scan
-per-column statistics and exact equi-width histograms. At 100 TB a
-profile must be ONE pass over the data with partial aggregation, never
-a per-column loop of jobs; both operators here compile to a single
-scan + single reduce.
+per-column statistics and exact equi-width histograms. A profile is
+ONE pass over the data with partial aggregation, never a per-column
+loop of jobs; both operators here compile to a single scan + single
+reduce.
 
 The reference engine has no profiler — this is beyond-reference
 pipeline surface (every curation run starts by profiling the crawl).
@@ -264,8 +264,8 @@ def join_blowup_profile(left: SparkDF, right: SparkDF,
                         top: int = 20) -> SparkDF:
     """Pre-join safety check: the exact output cardinality an inner
     equi-join WOULD produce, per hot key — catches the accidental
-    many-to-many blowup (duplicate keys on both sides) before a 100 TB
-    shuffle materializes it. Returns the ``top`` keys by pair count
+    many-to-many blowup (duplicate keys on both sides) before the
+    join's shuffle materializes it. Returns the ``top`` keys by pair count
     ``(key, n_left, n_right, pairs, rank)`` plus a ``__total__`` row
     (key NULL, rank 0) carrying the full join size.
 
@@ -335,8 +335,8 @@ def histogram_equidepth(df: SparkDF, col: str, buckets: int) -> SparkDF:
     partial-aggregated groupBy. Bucket edges are floor-rounded to 1e-4
     for cross-engine float parity; counts are exact.
 
-    The exact percentile is the oracle anchor; at 100 TB swap the
-    boundary pass for ``sketches.approx_quantiles`` (same downstream
+    The exact percentile is the oracle anchor; for large inputs swap
+    the boundary pass for ``sketches.approx_quantiles`` (same downstream
     plan, error-bounded boundaries)."""
     ps = [i / buckets for i in range(1, buckets)]
     c = F.col(col).cast("double")
@@ -365,7 +365,7 @@ def histogram_equidepth(df: SparkDF, col: str, buckets: int) -> SparkDF:
 
 def histogram_equidepth_approx(df: SparkDF, col: str, buckets: int,
                                accuracy: int = 10000) -> SparkDF:
-    """The 100 TB equi-depth path, CORRECTNESS-GATED: boundaries come
+    """The one-pass equi-depth path, CORRECTNESS-GATED: boundaries come
     from one-pass ``percentile_approx`` (rank error ``eps =
     1/accuracy``) instead of the exact sort-based percentile, the
     downstream plan (broadcast boundary fold -> partial-aggregated
@@ -469,7 +469,7 @@ def group_quantiles(df: SparkDF, col: str, by: list[str],
     (mad_outliers doctrine).
 
     ONE grouped sort-based percentile aggregation — the data
-    shuffles once on ``by``. The 100 TB path swaps
+    shuffles once on ``by``. The approximate path swaps
     ``percentile_approx`` into the same shape (gated like
     ``corpus_percentiles_approx``)."""
     # one percentile BUFFER for all ps (array percentage form) — per-p
@@ -525,7 +525,7 @@ def mad_outliers(df: SparkDF, col: str, by: list[str],
     join between them (group cardinality rows, not data rows) and one
     final grouped count — the data shuffles on ``by`` once per
     percentile pass. Exact medians are the verification-grade path;
-    the 100 TB production path swaps in ``percentile_approx`` with
+    the approximate path swaps in ``percentile_approx`` with
     the same shape (see ``approx_quantiles_check`` for how the bound
     is then gated).
     """
@@ -802,7 +802,7 @@ def weighted_quantiles(df: SparkDF, x_col: str, w_col: str,
     Plan shape: ONE hash exchange on ``by`` feeds both window passes
     (cumulative and total), then the per-p thresholds collapse in the
     same grouped aggregation — no second shuffle, no sort beyond the
-    per-group window sort. At 100 TB this is a per-group sort; for
+    per-group window sort. The cost is a per-group sort; for
     heavy groups swap in the GK-sketch path (sketches.py) the same
     way corpus_percentiles documents."""
     from pyspark.sql import Window

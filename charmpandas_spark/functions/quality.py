@@ -17,8 +17,8 @@ pipeline starts from:
 
 All signals are pure ``pyspark.sql.functions`` Column expressions
 (higher-order array functions + regexp counts) — JVM-side, fully
-codegen'd, no UDFs, no shuffle: at 100 TB these run at scan speed and
-the filter predicate rides into the parquet scan. Each function has a
+codegen'd, no UDFs, no shuffle: they evaluate inside the scan stage
+and the filter predicate rides into the parquet scan. Each function has a
 ``_sql`` DuckDB twin for the oracle gate; float ratios use the
 repo-wide ``floor(x*10000)/10000`` convention so both engines agree
 bit-for-bit (no round-half divergence).
@@ -282,9 +282,9 @@ def quantile_keep(
     on any partitioning.
 
     One shuffle (hash by group for the window); per-group work is a
-    sort — at 100 TB prefer a two-pass variant (approx quantile cut
-    from ``sketches.approx_quantiles``, then a scan-local filter)
-    when groups are huge; this exact form is the oracle-checkable
+    sort — for large groups prefer the two-pass
+    :func:`quantile_keep_approx` (approx quantile cut, then a
+    scan-local filter); this exact form is the oracle-checkable
     anchor for that approximation.
     """
     from pyspark.sql import Window
@@ -317,7 +317,7 @@ def quantile_keep_approx(
     by: str | None = None,
     accuracy: int = 10000,
 ) -> SparkDF:
-    """The 100 TB path :func:`quantile_keep`'s docstring promises:
+    """The large-group path :func:`quantile_keep`'s docstring promises:
     keep ~the top ``keep_frac`` by score via a TWO-PASS plan — pass 1
     computes the (1 - keep_frac) quantile threshold per group with
     ``percentile_approx`` (one partial-aggregated groupBy, constant
@@ -440,8 +440,8 @@ def calibration_table(df: SparkDF, score_col: str, label_col,
     ``label_col`` is any boolean/0-1 expression. Boundaries ride the
     plan as ONE broadcast array aggregate; bin assignment is a
     scan-local integer fold; one partial-aggregated groupBy ends it.
-    At 100 TB swap the exact percentile for approx_quantiles with
-    the same downstream plan (histogram_equidepth doctrine)."""
+    For large inputs swap the exact percentile for approx_quantiles
+    with the same downstream plan (histogram_equidepth doctrine)."""
     y = (label_col if not isinstance(label_col, str)
          else F.col(label_col)).cast("int")
     s = F.col(score_col).cast("double")

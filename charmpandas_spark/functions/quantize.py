@@ -244,9 +244,9 @@ def pq_train_encode(df: SparkDF, vec_col: str, id_col: str,
     vectors (``kmeans._train_sample`` — replayable cross-engine);
     encoding still covers the full corpus. A PQ codebook needs
     ~100k training vectors (Jegou et al. 2011 trains on a held-out
-    learning set), so at 100 TB unsampled training would be
-    ``iters`` full-corpus passes for no accuracy gain — pass a cap
-    in production."""
+    learning set), so unsampled training runs ``iters``
+    full-corpus passes for no accuracy gain — pass a cap on large
+    corpora."""
     from pyspark import StorageLevel
 
     from .kmeans import _quantize, _train_sample

@@ -1,7 +1,7 @@
-"""Approximate/sketch aggregations for 100 TB-scale profiling.
+"""Approximate/sketch aggregations for one-pass profiling.
 
-Counting distincts or computing quantiles exactly over 100 TB costs a
-full shuffle of the key space; sketches answer within a few percent
+Counting distincts or computing quantiles exactly costs a full
+shuffle of the key space; sketches answer within a few percent
 with bounded memory and a single pass. All built on Spark's native
 sketch aggregates (JVM-side, mergeable, partial-aggregable):
 
@@ -94,7 +94,7 @@ def approx_quantiles_check(df: SparkDF, col: str,
     Output: ``(*by, quantile, n, ok)`` — ``quantile`` is the integer
     ``p * 100``. The tolerance is ENCODED IN THE QUERY, so a DuckDB
     oracle can assert the expected table (group counts x quantiles,
-    ok = true) and a value-hash compare proves the 100 TB approx path
+    ok = true) and a value-hash compare proves the approx path
     honors its bound, not just that the exact anchor exists.
 
     Cost: the sketch pass plus ONE exact rank-counting pass over the
@@ -307,10 +307,10 @@ def audience_overlap_check(df: SparkDF, set_col: str, key_col: str,
     ``set_col`` values (a < b), estimate |A ∩ B| over ``key_col`` by
     HLL inclusion-exclusion — ``est(A) + est(B) − est(A ∪ B)`` with
     the union computed by MERGING the two sketches (never rescanning
-    the data: the ad-tech / reach-dedup primitive, and the reason HLL
-    beats exact distinct at 100 TB — per-segment sketches are built
-    once, every pairwise overlap is then sketch algebra on k·2^lg_k
-    bytes). The hashed output carries the EXACT overlap and ``ok`` =
+    the data: the ad-tech / reach-dedup primitive — per-segment
+    sketches are built once, every pairwise overlap is then sketch
+    algebra on k·2^lg_k bytes). The hashed output carries the EXACT
+    overlap and ``ok`` =
     |est − exact| ≤ max(rel_tol·|A∪B|, abs_tol) — three compounding
     HLL estimates, so the tolerance is wider than the single-sketch
     gate in :func:`approx_distinct_check`. The sketch estimates

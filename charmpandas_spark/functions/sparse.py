@@ -65,9 +65,9 @@ def phrase_match(df: SparkDF, text_col: str, id_col: str,
     ``phrase``, with occurrence counts — OVERLAPPING occurrences
     included (a sliding positional test, not substring replace).
 
-    Pure Column expressions, no join, no shuffle, no UDF — at 100 TB
-    this is a predicate pushed through the scan, embarrassingly
-    parallel. The count is one ``regexp_count`` of a ZERO-WIDTH
+    Pure Column expressions, no join, no shuffle, no UDF — a
+    scan-local projection, evaluated per row in parallel. The count
+    is one ``regexp_count`` of a ZERO-WIDTH
     lookaround pattern over the normalized text: ``(?<![^ ])`` pins a
     token start, the lookahead requires the phrase there followed by
     a token boundary, and because every match is zero-width the regex
@@ -276,8 +276,8 @@ def postings_write(df: SparkDF, text_col: str, id_col: str, path: str,
     — one directory per bucket. The on-disk half of the retrieval
     claim: a lookup for q query terms opens at most q of
     ``num_buckets`` directories (directory-level pruning at planning
-    time), so at 100 TB a term lookup touches ~q/num_buckets of the
-    index bytes no matter how big the corpus gets. Same layout
+    time), so a term lookup reads ~q/num_buckets of the index
+    bytes whatever the corpus size. Same layout
     pattern as ``ivf.ivf_write``; the pruning is pytest-witnessed
     from the scan node, not argued."""
     tp = term_postings(df, text_col, id_col)

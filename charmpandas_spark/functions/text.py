@@ -6,7 +6,7 @@ complete scalar-function inventory). These are the north-star
 LLM-pipeline operators: language ID, quality scoring, token counting,
 document fingerprinting.
 
-Design rules (100 TB):
+Design rules:
 - Everything is built-in ``pyspark.sql.functions`` — JVM-side,
   whole-stage-codegen'd, no Python in the hot path.
 - Deterministic across engines: hashing is md5 (identical in Spark and
@@ -384,7 +384,7 @@ def token_frequency_stats(df, text_col: str, id_col: str):
       detector without a log, so every value is two IEEE divisions
       + floor, bit-identical in the DuckDB oracle).
 
-    Plan shape (100 TB): explode -> vocab aggregation (one shuffle,
+    Plan shape: explode -> vocab aggregation (one shuffle,
     map-side combined) -> SHUFFLE_HASH join of the exploded tokens
     against the vocab (hinted: the vocab can be 10^8 rows — never
     broadcast it; same policy as the dedup inverted index) -> per-doc
@@ -979,8 +979,8 @@ def vocab_coverage(df, ref_df, text_col: str, id_col: str,
     broadcasts to the coverage join; the corpus side is one
     scan-local explode + a broadcast LEFT join + one groupBy on the
     doc id — the exploded tokens shuffle once, the corpus itself
-    never does. At 100 TB the vocab stays vocab_size rows no matter
-    the data; the doc-id groupBy is the only data-scale exchange.
+    never does. The vocab stays vocab_size rows whatever the
+    data size; the doc-id groupBy is the only data-scale exchange.
     """
     from .dedup import spread
 

@@ -5,7 +5,7 @@ else: parse each document's source URL, extract the registrable
 domain, and drop documents from blocklisted domains / path patterns
 (spam, SEO farms, adult, boilerplate mirrors).
 
-Design (100 TB):
+Design:
 - Parsing is pure built-ins: ``try_parse_url``, a native Spark
   expression returning NULL on malformed input (ANSI-safe — plain
   ``parse_url`` THROWS under Spark 4 ANSI mode), plus a

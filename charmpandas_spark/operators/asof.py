@@ -7,7 +7,7 @@ enrichment join; DuckDB/kdb call it ASOF JOIN, pandas merge_asof).
 Spark-first implementation — NO join at all: tag both sides, union,
 and run one ``last(value, ignorenulls=True)`` window over
 (key, ts)-sorted rows, then keep the left rows. One shuffle on the
-key, linear scan within partitions; at 100 TB this beats any
+key, linear scan within partitions; that is less work than any
 join-based formulation (a range join would be O(n*m) per key, and a
 window self-join shuffles twice).
 

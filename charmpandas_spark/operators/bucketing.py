@@ -2,7 +2,7 @@
 
 The reference re-shuffles both join inputs on every join
 (src/partition.cpp:1422-1581) and even re-partitions them as a side
-effect. Spark's answer at 100 TB is to pay the shuffle ONCE at write
+effect. Spark's answer is to pay the shuffle ONCE at write
 time: ``bucketBy(k)`` hash-partitions the table into fixed buckets on
 disk, and any later equi-join/aggregation on the bucket keys reads
 both sides pre-partitioned — zero exchange in the plan (verified by

@@ -12,7 +12,7 @@ consumers:
   version becomes a row with a ``[valid_from, valid_to)`` sequence
   interval; a delete closes the last interval without opening one.
 
-Plan shape / 100 TB story: both are ONE hash exchange of the log on
+Plan shape: both are ONE hash exchange of the log on
 the key columns followed by a per-key window (``row_number`` /
 ``lead``) — no join, no second shuffle, and the window runs inside
 whole-stage codegen. Per-key state is the key's own change history

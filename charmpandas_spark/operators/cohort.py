@@ -8,7 +8,7 @@ engine has no such composite, but it is table stakes for any event
 warehouse; we express it as three aggregations that all hash-partition
 on the same keys.
 
-Plan shape / 100 TB story:
+Plan shape:
 - ONE exchange of the events projection on ``user_col``: min period
   and the distinct period set come out of the SAME aggregation
   (``collect_set`` bounded by the calendar — a few hundred periods —

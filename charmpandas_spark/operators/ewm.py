@@ -15,7 +15,7 @@ result bit-identical in any engine (the micro-unit doctrine used
 across this package). ``value_col`` must be a NON-NEGATIVE integer
 column (cents/micros).
 
-Plan shape / 100 TB story: ONE hash exchange on the key + one sort;
+Plan shape: ONE hash exchange on the key + one sort;
 all ``terms`` lags evaluate over the SAME window spec in a single
 codegen'd pass (Catalyst collapses same-spec window expressions), so
 cost is O(rows · terms) scan-local arithmetic — no per-term shuffle,

@@ -14,7 +14,7 @@ O(sqrt(m)). Wedges (u→v, u→w) are generated per source and closed
 against the oriented edge set — each triangle is counted exactly
 once (its minimum-(degree, id) vertex generates the wedge).
 
-Plan shape / 100 TB story: three hash exchanges — edges by src for
+Plan shape: three hash exchanges — edges by src for
 wedge generation (a self-join Catalyst executes as ONE shuffle read
 both sides), wedges by (v, w) against oriented edges for closure, and
 the degree aggregation. The orientation is what makes this survive

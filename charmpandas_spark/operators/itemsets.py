@@ -16,7 +16,7 @@ doctrine): ``lift_micro`` is derived from the already-floored
 under ~9e12 (a DECIMAL(38,0) swap is the knob beyond that; noted
 below, not needed at any tested scale).
 
-Scale design (100 TB): the basket self-join emits k^2 rows per
+Plan shape: the basket self-join emits k^2 rows per
 basket where k = DISTINCT items per basket — bounded by the item
 domain (event taxonomies are small) or by the explicit
 ``max_items_per_basket`` guard, never by basket row count. Shuffles:

@@ -19,7 +19,7 @@ the overwhelmingly common small-batch case ``broadcast_source=True``
 switches to the two-join equivalent: a broadcast LEFT join applies
 updates with ZERO base-table shuffle, and the insert arm anti-joins
 the batch against a keys-only projection of the base (shuffles just
-the key columns). At 100 TB the broadcast plan moves ~0 base bytes
+the key columns). The broadcast plan moves no base-table rows
 across the wire; pair it with a clustered/bucketed base layout and
 the rewrite itself prunes to touched files.
 """
@@ -174,8 +174,8 @@ def table_diff(
     complement of :func:`merge_into` (what DID that merge change?).
 
     Output: the key columns + ``change_type``; ``unchanged`` rows are
-    dropped unless ``include_unchanged`` (at 100 TB the interesting
-    rows are the tiny minority — don't materialize the rest).
+    dropped unless ``include_unchanged`` (changed rows are usually
+    the minority — the plan never materializes the rest).
 
     Scale: ONE full-outer shuffle join on the keys; the per-column
     null-safe comparison is a scan-local expression. For

@@ -24,8 +24,8 @@ receiving mass but redistribute none — the standard simplification;
 callers who need mass conservation add a sink edge per dangling node.
 
 Why persist, not per-iteration eager checkpoints (r12 experiment,
-ROOT-CAUSED r13 — ``tools/checkpoint_repro.py``,
-``CHECKPOINT_REPRO_r13.json``): each eager checkpoint is a
+ROOT-CAUSED r13 — the round-13 checkpoint repro and its artifact
+are in git at commit 54701ba): each eager checkpoint is a
 synchronous job barrier that waits on its slowest task, so k chained
 checkpoints pay k ADDITIVE straggler tails under host contention
 (measured chained/persist ratio 1.37x idle -> 2.48x with a competitor

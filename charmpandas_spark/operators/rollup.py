@@ -1,7 +1,7 @@
 """Incremental rollup maintenance — the materialized-view pattern for
 append-only facts.
 
-A 100 TB event table is never re-aggregated from scratch for a
+The event table is never re-aggregated from scratch for a
 dashboard: a small rollup table of MERGEABLE partial aggregates
 (count / sum / min / max — anything with a commutative monoid) is
 maintained by folding in each new batch's partial aggregate. This

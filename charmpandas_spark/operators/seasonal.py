@@ -20,7 +20,7 @@ are exact BIGINTs; means are floored micro-units; deviations and
 CUSUM partial sums stay in exact integer micro-space (1e6*n is exact,
 the mean is floored once), so both engines agree bit-for-bit.
 
-Scale design (100 TB): the only full-data exchange is the
+Plan shape: the only full-data exchange is the
 (group, bucket) counting aggregation — map-side partial agg bounds
 shuffle volume by bucket cardinality, not event rows. Everything
 after operates on the bucketed series: O(groups x buckets) rows.

@@ -11,7 +11,8 @@ cases AQE can't fix:
   buys N-way parallelism on the hot key.
 - ``broadcast_join``: force the planner when statistics mislead it.
 
-MEASURED CROSSOVER (bench.py skew_demo, r9/r10: 10M-row fact, one
+MEASURED CROSSOVER (the legacy sweep's ``skew_demo``, r9/r10, in
+git at commit 54701ba: 10M-row fact, one
 key = 95% of rows, broadcast disabled, local[32]): AQE's runtime
 split equalizes the straggler better than salting pays for itself —
 skew-blind 6.4 s / max-task 4.3 s, AQE split 4.7 s / 2.9 s, salted
@@ -29,7 +30,7 @@ phase and semantically needs the whole key in one task, where
 neither AQE nor salting helps and the fix is a different query shape
 (pre-aggregate or bounded windows), or (c) the hot partition is so
 large a single split-chunk of ``advisoryPartitionSizeInBytes`` still
-spills — at 100 TB, tune the advisory size first, salt second.
+spills — tune the advisory size first, salt second.
 """
 
 from __future__ import annotations

@@ -12,8 +12,8 @@ tasks. This operator instead runs two BOUNDED aggregations:
   2. merge: per group, flatten the ≤ S·k survivors, sort once, keep k.
 
 Shuffled bytes are ≤ groups·S·k structs — independent of the data
-size — and every stage is parallel in groups·S. This is the shape
-that survives 100 TB: the reference's top-k is a full global sample
+size — and every stage is parallel in groups·S. No stage orders
+the whole table: the reference's top-k is a full global sample
 sort + limit (partition.cpp's sort path); a bounded partial aggregate
 never materializes an ordering of the whole table.
 

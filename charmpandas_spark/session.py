@@ -90,11 +90,12 @@ DEFAULT_CONF = {
     "spark.ui.enabled": "false",
     # Shuffle/spill/broadcast block codec. lz4 (Spark's default,
     # restated for visibility) measured a WASH vs zstd on local[32]
-    # — both A/B leg orders committed in CODEC_AB_r17.json; the
-    # apparent per-order win was page-cache leg order, not codec. On
-    # a real cluster the shuffle crosses NICs and zstd's ratio is
-    # the lever (guide §2.3): set SPARK_GRAFT_IO_CODEC=zstd there
-    # and re-measure — deployment decision, not a local default.
+    # in round 17 over both A/B leg orders (the round-17 codec A/B
+    # artifact is in git at commit 54701ba); the apparent per-order
+    # win was page-cache leg order, not codec. On a real cluster the
+    # shuffle crosses NICs and zstd's ratio is the lever (guide §2.3):
+    # set SPARK_GRAFT_IO_CODEC=zstd there and re-measure — deployment
+    # decision, not a local default.
     "spark.io.compression.codec":
         os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
 }

@@ -267,8 +267,8 @@ def read_parquet(
 ) -> DataFrame:
     """Lazy parquet scan -> DataFrame (reference: eager full-column
     read, no pushdown — src/partition.cpp:812 reads ALL columns; here
-    Catalyst prunes columns and pushes predicates into the scan, the
-    single biggest win over the reference at 100 TB, SURVEY §4.1).
+    Catalyst prunes columns and pushes predicates into the scan, so
+    the scan reads only the referenced columns, SURVEY §4.1).
 
     Zero-job fast path: like the reference (src/partition.cpp:763-767)
     the schema comes from the parquet footer on the driver: one footer
@@ -389,7 +389,7 @@ def write_clustered(
     cluster keys), so every file owns a contiguous, internally-sorted
     key range.
 
-    Why this matters at 100 TB: parquet stores per-row-group min/max
+    Why this matters: parquet stores per-row-group min/max
     statistics, and readers (this engine, Trino, DuckDB, ...) skip
     row groups whose stats exclude the predicate. A hash-partitioned
     unsorted write scatters every key range across every file —
@@ -438,8 +438,8 @@ def compact_files(
     ``path``).
 
     Why it exists: streaming sinks, per-batch merges, and
-    over-parallel writes leave thousands of tiny files; at 100 TB
-    the *listing* alone stalls planning, and every scan pays
+    over-parallel writes leave thousands of tiny files; the
+    *listing* alone then slows planning, and every scan pays
     per-file open/footer costs. The output file count is derived
     from the layout's actual byte size (Hadoop FileSystem content
     summary — works on HDFS/S3A/local alike), not row counts, so

@@ -18,6 +18,43 @@ __all__ = ["stream_stream_join", "stream_stream_join_outer",
            "stream_static_join"]
 
 
+def _interval_join(left, right, key, left_ts, right_ts, max_delay,
+                   watermark, suffixes, how) -> SparkDF:
+    """The body every stream-stream join shares: watermark both sides,
+    suffix the overlapping columns, join on ``key`` where the right
+    event occurs within ``[left_ts - max_delay, left_ts]``.
+
+    The right key is renamed, never dropped post-join by reference:
+    when both sides derive from ONE frame (a filtered self-replay),
+    ``lw[key]`` and ``rw[key]`` resolve to one attribute id and
+    ``drop(rw[key])`` removes the LEFT copy — the output schema then
+    depends on lineage, and an outer join's unmatched rows lose their
+    key. A rename is unambiguous. The right and full joins coalesce
+    the key (it is null on exactly one side of an unmatched row)."""
+    lw = ensure_event_time(left, left_ts).withWatermark(left_ts, watermark)
+    rw = ensure_event_time(right, right_ts).withWatermark(right_ts,
+                                                          watermark)
+    overlap = (set(lw.columns) & set(rw.columns)) - {key}
+    rkey = key + "__cps_r"
+    lw = lw.withColumnsRenamed({c: c + suffixes[0] for c in overlap})
+    rw = rw.withColumnsRenamed({c: c + suffixes[1] for c in overlap}
+                               | {key: rkey})
+    lts = left_ts + suffixes[0] if left_ts in overlap else left_ts
+    rts = right_ts + suffixes[1] if right_ts in overlap else right_ts
+    # the equality predicate must reference live columns on BOTH join
+    # inputs (Spark requires an equality for stream-stream state keying)
+    cond = (
+        (lw[key] == rw[rkey])
+        & (F.col(rts) <= F.col(lts))
+        & (F.col(rts) >= F.col(lts) - F.expr(f"INTERVAL {max_delay}"))
+    )
+    joined = lw.join(rw, on=cond, how=how)
+    if how in ("fullOuter", "rightOuter"):
+        joined = joined.withColumn(key, F.coalesce(F.col(key),
+                                                   F.col(rkey)))
+    return joined.drop(rkey)
+
+
 def stream_stream_join(
     left: SparkDF,
     right: SparkDF,
@@ -35,23 +72,10 @@ def stream_stream_join(
     without the time condition a stream-stream join would buffer
     forever. Columns are suffixed like the engine's batch merge
     (reference ``_l``/``_r`` convention, src/partition.cpp:1099-1102).
+    The output carries ONE ``key`` column, in the left side's position.
     """
-    lw = ensure_event_time(left, left_ts).withWatermark(left_ts, watermark)
-    rw = ensure_event_time(right, right_ts).withWatermark(right_ts, watermark)
-    overlap = (set(lw.columns) & set(rw.columns)) - {key}
-    lw = lw.withColumnsRenamed({c: c + suffixes[0] for c in overlap})
-    rw = rw.withColumnsRenamed({c: c + suffixes[1] for c in overlap})
-    lts = left_ts + suffixes[0] if left_ts in overlap else left_ts
-    rts = right_ts + suffixes[1] if right_ts in overlap else right_ts
-    cond = (
-        (lw[key] == rw[key])
-        & (F.col(rts) <= F.col(lts))
-        & (F.col(rts) >= F.col(lts) - F.expr(f"INTERVAL {max_delay}"))
-    )
-    # the equality predicate must reference live columns on BOTH join
-    # inputs (Spark requires an equality for stream-stream state
-    # keying); drop the duplicate right key only after the join.
-    return lw.join(rw, on=cond, how="inner").drop(rw[key])
+    return _interval_join(left, right, key, left_ts, right_ts, max_delay,
+                          watermark, suffixes, "inner")
 
 
 def stream_stream_join_outer(
@@ -76,27 +100,8 @@ def stream_stream_join_outer(
     Replays must instead advance the watermark past the data with
     far-future sentinel batches on BOTH streams (the min of the
     per-source watermarks is what gates emission)."""
-    lw = ensure_event_time(left, left_ts).withWatermark(left_ts, watermark)
-    rw = ensure_event_time(right, right_ts).withWatermark(right_ts,
-                                                          watermark)
-    overlap = (set(lw.columns) & set(rw.columns)) - {key}
-    lw = lw.withColumnsRenamed({c: c + suffixes[0] for c in overlap})
-    rw = rw.withColumnsRenamed({c: c + suffixes[1] for c in overlap})
-    lts = left_ts + suffixes[0] if left_ts in overlap else left_ts
-    rts = right_ts + suffixes[1] if right_ts in overlap else right_ts
-    # rename the RIGHT key instead of dropping it post-join: when both
-    # sides derive from the SAME stream (a filtered self-replay),
-    # lw[key] and rw[key] resolve to one attribute id and
-    # ``drop(rw[key])`` silently keeps the RIGHT (null-padded) copy —
-    # unmatched rows then lose their key. A rename is unambiguous.
-    rkey = key + "__cps_r"
-    rw = rw.withColumnRenamed(key, rkey)
-    cond = (
-        (lw[key] == rw[rkey])
-        & (F.col(rts) <= F.col(lts))
-        & (F.col(rts) >= F.col(lts) - F.expr(f"INTERVAL {max_delay}"))
-    )
-    return lw.join(rw, on=cond, how="leftOuter").drop(rkey)
+    return _interval_join(left, right, key, left_ts, right_ts, max_delay,
+                          watermark, suffixes, "leftOuter")
 
 
 def stream_stream_join_full(
@@ -125,26 +130,8 @@ def stream_stream_join_full(
     :func:`stream_stream_join_outer`: sentinel batches on BOTH
     streams must push the min-of-sources watermark past the data or
     the unmatched rows of either side stay buffered."""
-    lw = ensure_event_time(left, left_ts).withWatermark(left_ts, watermark)
-    rw = ensure_event_time(right, right_ts).withWatermark(right_ts,
-                                                          watermark)
-    overlap = (set(lw.columns) & set(rw.columns)) - {key}
-    lw = lw.withColumnsRenamed({c: c + suffixes[0] for c in overlap})
-    rw = rw.withColumnsRenamed({c: c + suffixes[1] for c in overlap})
-    lts = left_ts + suffixes[0] if left_ts in overlap else left_ts
-    rts = right_ts + suffixes[1] if right_ts in overlap else right_ts
-    # rename the right key (never drop(rw[key]) — see the outer
-    # variant's self-replay aliasing note), then coalesce post-join
-    rkey = key + "__cps_r"
-    rw = rw.withColumnRenamed(key, rkey)
-    cond = (
-        (lw[key] == rw[rkey])
-        & (F.col(rts) <= F.col(lts))
-        & (F.col(rts) >= F.col(lts) - F.expr(f"INTERVAL {max_delay}"))
-    )
-    joined = lw.join(rw, on=cond, how="fullOuter")
-    return (joined.withColumn(key, F.coalesce(F.col(key), F.col(rkey)))
-                  .drop(rkey))
+    return _interval_join(left, right, key, left_ts, right_ts, max_delay,
+                          watermark, suffixes, "fullOuter")
 
 
 def stream_stream_join_right(
@@ -163,24 +150,8 @@ def stream_stream_join_right(
     max_delay`` (no left event with ``lts in [rts, rts + max_delay]``
     can still arrive). The output key is the coalesced single column,
     like the full variant. Same sentinel replay contract."""
-    lw = ensure_event_time(left, left_ts).withWatermark(left_ts, watermark)
-    rw = ensure_event_time(right, right_ts).withWatermark(right_ts,
-                                                          watermark)
-    overlap = (set(lw.columns) & set(rw.columns)) - {key}
-    lw = lw.withColumnsRenamed({c: c + suffixes[0] for c in overlap})
-    rw = rw.withColumnsRenamed({c: c + suffixes[1] for c in overlap})
-    lts = left_ts + suffixes[0] if left_ts in overlap else left_ts
-    rts = right_ts + suffixes[1] if right_ts in overlap else right_ts
-    rkey = key + "__cps_r"
-    rw = rw.withColumnRenamed(key, rkey)
-    cond = (
-        (lw[key] == rw[rkey])
-        & (F.col(rts) <= F.col(lts))
-        & (F.col(rts) >= F.col(lts) - F.expr(f"INTERVAL {max_delay}"))
-    )
-    joined = lw.join(rw, on=cond, how="rightOuter")
-    return (joined.withColumn(key, F.coalesce(F.col(key), F.col(rkey)))
-                  .drop(rkey))
+    return _interval_join(left, right, key, left_ts, right_ts, max_delay,
+                          watermark, suffixes, "rightOuter")
 
 
 def stream_static_join(

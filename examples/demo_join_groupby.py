@@ -43,15 +43,14 @@ def generate(tmp: str) -> tuple[str, str]:
 
 def run_workload(spark, verbose: bool = False) -> float:
     """Generate, warm up, run the timed join+groupby+fetch, return
-    elapsed seconds. Shared by the standalone demo below and
-    bench.py's ``baseline_anchor`` entry (VERDICT r10 #7) — ONE
-    source of truth for the baseline-comparison workload.
+    elapsed seconds — the baseline-comparison workload against the
+    reference's published 10.72 s (BASELINE.md).
 
     Requires a session configured like :func:`main`'s (shuffle-hash
     join forced — no small dimension side in an equal-size 2M x 2M
-    string-key join); bench sets those two confs around the call.
+    string-key join).
 
-    The measurement is steady-state, same policy as bench.py: the
+    The measurement is steady-state: the
     reference's 10.72 s came from a WARM notebook (cluster up, prior
     cells executed), so pay the one-time JVM/codegen/shuffle-path
     init before the timed region — on SYNTHETIC frames with the same

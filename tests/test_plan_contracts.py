@@ -1,7 +1,7 @@
 """Plan-shape contracts for the most expensive queries (VERDICT r11
-#6): the repo's 100 TB scaling claims rest on physical-plan facts —
-exchange counts, join strategies, pushed filters, column pruning —
-that until now only round verdicts audited by hand. These tests pin
+#6): how a query scales rests on physical-plan facts — exchange
+counts, join strategies, pushed filters, column pruning — that until
+now only round verdicts audited by hand. These tests pin
 them, so a plan regression (a lost broadcast hint, a filter that
 stops reaching the scan, an accidental cartesian product) fails CI
 instead of shipping silently and surfacing as an unexplained bench
@@ -17,8 +17,9 @@ stat-broadcast cross joins (threshold scalars, corpus counts, trained
 codebooks) — structural, not data-sized — plus nothing else; a new
 BNL over row-scaled data trips the budget.
 
-Queries under contract = the top of BENCH_FULL's cost ranking — the
-ones a silent plan regression would hurt most at 100 TB.
+Queries under contract = the top of the round-17/18 legacy sweep's
+cost ranking (``BENCH_FULL.json``, in git at commit 54701ba) — the
+ones whose cost a silent plan regression would multiply most.
 
 NOTE: iterative queries (pagerank, clusters/CC) localCheckpoint each
 round, so the RETURNED DataFrame's plan shows the per-round lineage
@@ -116,3 +117,23 @@ def test_dedup_spans_shuffle_hash_rejoin(plans):
     span-set rejoin (a sort-merge there adds two sorts of the widest
     intermediate); the hint must survive in the plan."""
     assert "ShuffledHashJoin" in plans["dedup_spans"]["joins"]
+
+
+def test_plan_drift_gate(tmp_path):
+    """VERDICT r13 #7: unexplained >30% exchange drift on a
+    CONTRACTED query must be a gate violation; explained drift and
+    non-contracted queries pass."""
+    from tools.plan_audit import contracted_queries, gate_violations
+
+    cq = contracted_queries()
+    assert "dsir_select" in cq and len(cq) >= 15
+    base = {"plans": {"dsir_select": {"exchanges": 15},
+                      "dedup_spans": {"exchanges": 6},
+                      "not_contracted": {"exchanges": 5}}}
+    cur = {"plans": {"dsir_select": {"exchanges": 21},
+                     "dedup_spans": {"exchanges": 7},
+                     "not_contracted": {"exchanges": 50}}}
+    v = gate_violations(base, cur, {})
+    assert len(v) == 1 and v[0].startswith("dsir_select")
+    assert gate_violations(
+        base, cur, {"dsir_select": "totals rewrite"}) == []

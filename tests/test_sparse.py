@@ -341,23 +341,17 @@ def test_jaccard_prefix_length_positional_filters(spark, sf_dir):
     release(out)
 
 
-def test_jaccard_prefix_filters_engage_at_bench_config(spark):
+def test_jaccard_prefix_filters_engage_at_bench_config(spark,
+                                                      sf1_documents):
     """VERDICT r9 #3: prove the PPJoin length + positional filters
-    actually DROP candidates under the exact BENCH sf1 probe config
+    actually DROP candidates under the legacy sweep's sf1 probe config
     (threshold 0.6, word-3-gram shingles, the token-suffixed 10-copy
-    ``bench_sf1`` documents fixture) — not just on the synthetic
-    small-corpus case above. If this assertion holds, a sweep number
-    at the unfiltered cost level is contention, not
-    filters-not-engaged."""
-    import os
-
-    import bench
+    ``sf1_documents`` fixture) — not just on the synthetic
+    small-corpus case above."""
     from charmpandas_spark.functions.dedup import (
         jaccard_prefix_candidates, release)
 
-    bench._ensure_sf1(bench.SF_DIR)
-    docs = spark.read.parquet(
-        os.path.join(bench.SF1_DIR, "documents.parquet"))
+    docs = spark.read.parquet(sf1_documents)
     plain = jaccard_prefix_candidates(
         docs, "text", "doc_id", threshold=0.6, shingle_n=3,
         length_filter=False, positional_filter=False)

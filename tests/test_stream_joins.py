@@ -69,6 +69,39 @@ def test_stream_stream_join_matches_batch(spark, events, tmp_path):
     cols = spark.table("s2_join").columns
     assert "ts_l" in cols and "ts_r" in cols  # _l/_r suffix convention
 
+def test_stream_stream_join_schema_independent_of_lineage(spark):
+    """An inner join of two filtered views of ONE frame has the same
+    column order and rows as the same join over two independently
+    built frames. Both sides sharing lineage makes ``lw[key]`` and
+    ``rw[key]`` one attribute, so a post-join ``drop(rw[key])`` would
+    drop the LEFT key and move the kept one behind the left columns."""
+    from charmpandas_spark.streaming.joins import stream_stream_join
+
+    rows = [(100, 0, "click"), (100, -600, "view"), (200, 0, "click"),
+            (200, 60, "view"), (300, 0, "click"), (300, -60, "view"),
+            (400, -60, "view")]
+
+    def frame(data):
+        return (spark.createDataFrame(
+                    data, "user_id long, s long, kind string")
+                .select("user_id",
+                        F.timestamp_seconds(F.col("s") + 1_700_000_000)
+                        .alias("ts"), "kind"))
+
+    one = frame(rows)
+    shared = stream_stream_join(one.filter(F.col("kind") == "click"),
+                                one.filter(F.col("kind") == "view"),
+                                "user_id")
+    apart = stream_stream_join(frame([r for r in rows if r[2] == "click"]),
+                               frame([r for r in rows if r[2] == "view"]),
+                               "user_id")
+    assert shared.columns == apart.columns == [
+        "user_id", "ts_l", "kind_l", "ts_r", "kind_r"]
+    got = sorted(shared.collect())
+    assert got == sorted(apart.collect())
+    assert [r["user_id"] for r in got] == [100, 300]
+
+
 def test_stream_stream_outer_join_emits_unmatched(spark, tmp_path):
     """LEFT OUTER variant: matched rows join, unmatched left rows
     emit null-padded once the (sentinel-advanced) watermark passes.

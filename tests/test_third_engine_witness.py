@@ -6,8 +6,9 @@ registry-query change could silently break a replay and the drift
 would only surface at the next manual run. Pin a cheap subset at
 sf0.001 through the SAME canonical-compare path the tool uses, so
 `pytest` catches a diverging replay in the round loop. The full
-20-query run (including pagerank/k-center/jaccard) stays in the
-committed PANDAS_WITNESS_r*.json artifacts — these five cover each
+run (including pagerank/k-center/jaccard; 242/242 in round 18,
+``PANDAS_WITNESS_r13..r18.json`` in git at commit 54701ba) is a
+manual ``python tools/pandas_witness.py`` run — these cover each
 dtype family the canonicalizer handles (float agg, int projection,
 string chunk, timestamp-derived session counts, integer micro-unit
 division).

@@ -7,25 +7,21 @@ pushed filters, codegen stages. Use while iterating on operators —
 Usage:
     python tools/plan_audit.py [query ...]          # human table
     python tools/plan_audit.py --json [query ...]   # plan-fact JSON
-    python tools/plan_audit.py --json --diff PLAN_AUDIT_r12.json
+    python tools/plan_audit.py --json > before.json   # at the baseline commit
+    python tools/plan_audit.py --json --diff before.json
         # live-audit the baseline's queries and print drifted plan
         # facts (VERDICT r12 #7): changes INSIDE contract headroom —
         # an exchange count that grew 6->8 under a <=10 contract, a
         # join strategy flip — that the pytest plan contracts would
-        # not fail but a human should review.
-
-``drift_summary()`` is the bench-loop hook: it diffs the two most
-recent committed ``PLAN_AUDIT_r*.json`` artifacts (pure file diff, no
-Spark — the live audit is run and committed once per round by the
-round loop itself), returning a short human string or None.
+        # not fail but a human should review. The per-round
+        # ``PLAN_AUDIT_r12..r18.json`` baselines are in git at
+        # commit 54701ba.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -114,24 +110,6 @@ def diff_plans(baseline: dict, current: dict) -> list[str]:
                 lines.append(f"{name}: {fact} {b.get(fact)} -> "
                              f"{c.get(fact)}")
     return lines
-
-
-def drift_summary() -> str | None:
-    """Diff the two most recent committed PLAN_AUDIT_r*.json; returns
-    e.g. 'r12->r13: dedup_spans: exchanges 6 -> 8; ...' or None when
-    fewer than two artifacts exist or nothing drifted."""
-    files = sorted(glob.glob(os.path.join(REPO, "PLAN_AUDIT_r*.json")),
-                   key=lambda p: int(re.search(r"_r(\d+)", p).group(1)))
-    if len(files) < 2:
-        return None
-    prev, last = (json.load(open(f)) for f in files[-2:])
-    lines = diff_plans(prev, last)
-    if not lines:
-        return None
-    tag = "->".join(f"r{re.search(r'_r([0-9]+)', f).group(1)}"
-                    for f in files[-2:])
-    return f"{tag}: " + "; ".join(lines[:6]) + \
-        (f" (+{len(lines) - 6} more)" if len(lines) > 6 else "")
 
 
 #: unexplained-exchange-drift gate threshold (VERDICT r13 #7): a

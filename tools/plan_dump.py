@@ -1,11 +1,12 @@
 """Dump ``.explain("formatted")`` for named registry queries to files.
 
-Round deliverable helper: the optimization rounds commit
-``plans/r<N>/<query>_{before,after}.txt`` so the judge can check plan
+Writes ``<out>/<query>_{before,after}.txt`` so a reader can check plan
 claims (exchange counts, join strategies, pushdown) without running
-Spark. Run this at the commit whose plans you want:
+Spark; rounds 17 and 18 committed theirs as ``plans/r17`` and
+``plans/r18``, in git at commit 54701ba. Run this at the commit whose
+plans you want:
 
-    python tools/plan_dump.py --out plans/r17 --suffix after \
+    python tools/plan_dump.py --out plans --suffix after \
         graph_pagerank dedup_jaccard_prefix
 
 "Before" files come from a git worktree checked out at the
