@@ -37,6 +37,30 @@ running gateway (``spark-submit``, a second session), a conf dir
 with real files, ``HADOOP_CONF_DIR``/``YARN_CONF_DIR`` set, or a
 cache directory that cannot be written. Deleting the directory
 resets it.
+
+Filter values by reference (a session extension): whole-stage codegen
+writes every primitive literal into the Java source it compiles, so
+``df[df.x > 5]`` and ``df[df.x > 6]`` each compile and load a class,
+which then runs as fresh, un-JIT'd code. ``jvm/ParamLiterals.scala``
+adds a physical-plan rule that replaces the non-null primitive
+literal operands (integer, floating, date, timestamp) of the
+comparisons in a ``Filter`` with an expression that reads its value
+from the generated class's ``references`` array, as Spark already
+does for string and decimal literals; every value of one filter
+shape then reuses the compiled class. The rule runs after the scan
+took its pushed filters, so row-group and partition pruning and the
+``explain`` text are unchanged. The extension jar,
+``params-<key>.jar``, sits in the same cache directory, keyed on the
+archive's JDK and Spark jars and on the Scala source; a session
+without it compiles it at interpreter exit with the Scala compiler
+Spark ships (about 5 s, after the archive dump), and later sessions
+load it through ``spark.jars`` (not the classpath, which would stop
+the archive from mapping) and ``spark.sql.extensions``, joined after
+any values the caller set for those keys. It applies exactly when
+the archive does; a missing compiler, a failed compile (retried at
+the next session's exit) or a jar that is not the one built for this
+key gives a session without it.
+Deleting the directory resets it too.
 """
 
 from __future__ import annotations
@@ -48,7 +72,10 @@ import hashlib
 import os
 import shutil
 import subprocess
+import tempfile
+import zipfile
 from typing import NamedTuple
+from urllib.request import pathname2url
 
 from pyspark.sql import SparkSession
 
@@ -110,11 +137,38 @@ _CDS_DUMP_WAIT_S = 120
 _CDS_QUIET = "-Xlog:cds=off"
 
 
+#: Scala source of the session extension that passes filter
+#: comparison values to generated code by reference
+_PARAM_SOURCE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                             "jvm", "ParamLiterals.scala")
+_PARAM_EXTENSION = "charmpandas.spark.ParamLiteralExtension"
+#: jar entry holding the jar's cache key; a jar without it, or without
+#: the extension class, is rebuilt
+_PARAM_STAMP = "charmpandas_spark.key"
+#: the longest interpreter exit waits for scalac
+_PARAM_BUILD_WAIT_S = 180
+
+
 class _CdsLaunch(NamedTuple):
     java_opts: str
     conf_dir: str        # empty directory the launch uses as SPARK_CONF_DIR
     archive: str
     dump: str | None     # temp file this launch dumps to, None when mapping
+    java: str
+    spark_jars: str      # $SPARK_HOME/jars
+    param_jar: str       # where the extension jar is cached
+    param_key: str       # what its stamp must read
+
+
+def _is_param_jar(path: str, key: str) -> bool:
+    try:
+        with zipfile.ZipFile(path) as z:
+            return (z.read(_PARAM_STAMP) == key.encode()
+                    and z.testzip() is None
+                    and _PARAM_EXTENSION.replace(".", "/") + ".class"
+                    in z.namelist())
+    except (OSError, KeyError, zipfile.BadZipFile):
+        return False
 
 
 def _is_archive(path: str) -> bool:
@@ -157,41 +211,88 @@ def _cds_launch(master: str) -> _CdsLaunch | None:
                              or os.path.expanduser("~/.cache"),
                              "charmpandas_spark")
         # the paths go into a java options string, which splits on
-        # whitespace and strips quotes
-        if any(c.isspace() or c in "\"'\\" for c in cache):
+        # whitespace and strips quotes, and into spark.jars, which
+        # splits on commas
+        if any(c.isspace() or c in "\"'\\," for c in cache):
             return None
         conf_dir = os.path.join(cache, "conf")
         os.makedirs(conf_dir, exist_ok=True)
         if os.listdir(conf_dir) or not os.access(cache, os.W_OK):
             return None
+        with open(_PARAM_SOURCE, "rb") as f:
+            source = f.read()
     except OSError:
         return None
+    param_key = hashlib.sha256(key.hexdigest().encode() + b"\0"
+                               + source).hexdigest()[:20]
     archive = os.path.join(cache, f"spark-{key.hexdigest()[:20]}.jsa")
+    jar_fields = (java, os.path.join(home, "jars"),
+                  os.path.join(cache, f"params-{param_key}.jar"), param_key)
     if _is_archive(archive):
         return _CdsLaunch(f"-XX:SharedArchiveFile={archive} -Xshare:auto "
-                          f"{_CDS_QUIET}", conf_dir, archive, None)
+                          f"{_CDS_QUIET}", conf_dir, archive, None,
+                          *jar_fields)
     dump = f"{archive}.{os.getpid()}.tmp"
     return _CdsLaunch(f"-XX:ArchiveClassesAtExit={dump} {_CDS_QUIET}",
-                      conf_dir, archive, dump)
+                      conf_dir, archive, dump, *jar_fields)
+
+
+def _end_jvm(proc, wait_s: float) -> None:
+    """End the driver JVM (it exits when its stdin closes) and wait."""
+    if proc is not None and proc.poll() is None:
+        proc.stdin.close()
+        try:
+            proc.wait(timeout=wait_s)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
 
 
 def _install_archive(proc, dump: str, archive: str) -> None:
-    """At interpreter exit: end the driver JVM (it exits when its stdin
-    closes), wait for it to write ``dump``, and move that into place."""
+    """At interpreter exit: end the driver JVM, wait for it to write
+    ``dump``, and move that into place."""
     try:
-        if proc is not None and proc.poll() is None:
-            proc.stdin.close()
-            proc.wait(timeout=_CDS_DUMP_WAIT_S)
+        _end_jvm(proc, _CDS_DUMP_WAIT_S)
         if _is_archive(dump):
             os.replace(dump, archive)
-    except subprocess.TimeoutExpired:
-        proc.kill()
-        proc.wait()
     except OSError:
         pass
     finally:
         with contextlib.suppress(OSError):
             os.remove(dump)
+
+
+def _build_param_jar(proc, cds: _CdsLaunch) -> None:
+    """At interpreter exit: end the driver JVM, compile the extension
+    with the Scala compiler Spark ships and write ``cds.param_jar``.
+    Any failure leaves no jar, so later sessions start without it."""
+    try:
+        _end_jvm(proc, _CDS_DUMP_WAIT_S)
+        if not glob.glob(os.path.join(cds.spark_jars,
+                                      "scala-compiler-*.jar")):
+            return
+        with tempfile.TemporaryDirectory(
+                dir=os.path.dirname(cds.param_jar)) as out:
+            subprocess.run(
+                [cds.java, "-Xmx512m", "-cp",
+                 os.path.join(cds.spark_jars, "*"), "scala.tools.nsc.Main",
+                 "-usejavacp", "-nowarn", "-d", out, _PARAM_SOURCE],
+                stdin=subprocess.DEVNULL, capture_output=True, check=True,
+                timeout=_PARAM_BUILD_WAIT_S)
+            part = f"{cds.param_jar}.{os.getpid()}.tmp"
+            try:
+                with zipfile.ZipFile(part, "w") as z:
+                    z.writestr(_PARAM_STAMP, cds.param_key)
+                    for root, _, files in os.walk(out):
+                        for name in files:
+                            path = os.path.join(root, name)
+                            z.write(path, os.path.relpath(path, out))
+                os.replace(part, cds.param_jar)
+            finally:
+                with contextlib.suppress(OSError):
+                    os.remove(part)
+    except (OSError, subprocess.SubprocessError):
+        pass
 
 
 def get_spark(
@@ -233,10 +334,21 @@ def get_spark(
     if extra_conf:
         conf.update(extra_conf)
     cds = _cds_launch(master)
+    param_jar = cds is not None and _is_param_jar(cds.param_jar,
+                                                  cds.param_key)
     if cds:
         # defaultJavaOptions go in front of the caller's extraJavaOptions
         key = "spark.driver.defaultJavaOptions"
         conf[key] = " ".join(filter(None, [cds.java_opts, conf.get(key)]))
+    if param_jar:
+        # spark.jars, not a classpath option: a changed -cp would stop
+        # the JVM from mapping the archive. A local: URI skips the
+        # Hadoop file-system start (about 0.5 s) and the file server
+        # that a plain path costs at launch.
+        jar_uri = "local:" + pathname2url(cds.param_jar)
+        for key, value in (("spark.jars", jar_uri),
+                           ("spark.sql.extensions", _PARAM_EXTENSION)):
+            conf[key] = ",".join(filter(None, [conf.get(key), value]))
     for k, v in conf.items():
         builder = builder.config(k, v)
     saved_conf_dir = os.environ.get("SPARK_CONF_DIR")
@@ -249,9 +361,13 @@ def get_spark(
             os.environ.pop("SPARK_CONF_DIR")
             if saved_conf_dir is not None:
                 os.environ["SPARK_CONF_DIR"] = saved_conf_dir
-    if cds and cds.dump:
-        atexit.register(_install_archive, SparkContext._gateway.proc,
-                        cds.dump, cds.archive)
+    if cds:
+        proc = SparkContext._gateway.proc
+        if not param_jar:
+            # atexit runs last-registered first: this runs after the dump
+            atexit.register(_build_param_jar, proc, cds)
+        if cds.dump:
+            atexit.register(_install_archive, proc, cds.dump, cds.archive)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -83,6 +83,16 @@ def _hidden(name: str) -> bool:
             or name.startswith(".") or name.endswith("._COPYING_"))
 
 
+def _local_path(path: str) -> str:
+    """The local path of a ``file:`` URI of an absolute path
+    (``file:/abs``, ``file:///abs``); any other path as given."""
+    if path.startswith("file:///"):
+        return path[7:]
+    if path.startswith("file:/") and not path.startswith("file://"):
+        return path[5:]
+    return path
+
+
 def _data_file(path: str) -> str | None:
     """Absolute path of the first data file (in path order, as Spark
     lists them for inference) of a local file or flat directory. None
@@ -289,8 +299,9 @@ def read_parquet(
       decimal256, dictionary, list, struct and map columns, and
       annotated binary (ENUM/JSON/BSON);
     - case-colliding column names;
-    - unreadable or missing files, non-local (``scheme://`` or
-      ``file:``) paths, globs, hidden names;
+    - unreadable or missing files, non-local (``scheme://`` other
+      than ``file:///``, or a relative ``file:``) paths, globs, hidden
+      names;
     - directories with a subdirectory (``partition_by`` layouts), a
       ``_metadata``/``_common_metadata`` summary, or no data file;
     - ``merge_schema=True``.
@@ -327,8 +338,10 @@ def read_parquet(
         "spark.sql.parquet.inferTimestampNTZ.enabled", "true") == "true"
     files, footers = [], []
     for p in paths:
-        f = _data_file(p)
-        footer = _footer_schema(f or _first_parquet_file(p),
+        # a file: URI goes to Spark as given, its local path to pyarrow
+        local = _local_path(p)
+        f = _data_file(local)
+        footer = _footer_schema(f or _first_parquet_file(local),
                                 binary_as_string, infer_ntz)
         if footer is not None:
             schema, ns_cols, exact = footer

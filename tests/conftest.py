@@ -19,6 +19,18 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def built(tmp_path_factory):
+    """A start-up cache after one first-use session: (cache dir,
+    result, stdout). It holds the class-data archive and the
+    session-extension jar that session built at exit."""
+    from .spark_child import run_child
+
+    cache = tmp_path_factory.mktemp("cds_cache")
+    out, stdout = run_child(cache)
+    return cache, out, stdout
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
 

@@ -346,3 +346,20 @@ def test_read_parquet_job_count(spark, sf_dir, tmp_path):
     assert _jobs(spark, lambda: cps.read_parquet(spark, allow_listed))[1] == 0
     assert _jobs(spark, lambda: cps.read_parquet(spark, spark_written))[1] == 0
     assert _jobs(spark, lambda: cps.read_parquet(spark, fallback))[1] <= 1
+
+
+@pytest.mark.parametrize("uri", ["file:{}", "file://{}"])
+@pytest.mark.parametrize("layout", ["file", "directory"])
+def test_file_uri_takes_the_footer_path(spark, tmp_path, uri, layout):
+    """A ``file:`` URI of a local path reads through the footer schema,
+    with no job, and gives what Spark's inference gives for the URI."""
+    local = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({
+        "id": pa.array([1, 2, None], pa.int64()),
+        "ts": pa.array([0, 1_000_000, None], pa.timestamp("us", tz="UTC")),
+        "s": pa.array(["a", None, "c"]),
+    }), local)
+    path = uri.format(local if layout == "file" else str(tmp_path))
+    got, jobs = _jobs(spark, lambda: cps.read_parquet(spark, path))
+    assert jobs == 0
+    _assert_same(got.sdf, _inferred(spark, path))
