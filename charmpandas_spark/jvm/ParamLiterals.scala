@@ -12,12 +12,11 @@ package charmpandas.spark
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, Expression, LeafExpression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, JavaCode}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{ColumnarRule, FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
 import org.apache.spark.sql.types._
 
 // Not a Literal subclass: Literal.equals accepts any Literal, so a
@@ -60,12 +59,4 @@ object ParamLiterals extends Rule[SparkPlan] {
     } catch {
       case NonFatal(_) => plan
     }
-}
-
-// spark.sql.extensions entry point
-class ParamLiteralExtension extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    ext.injectColumnar(_ => new ColumnarRule {
-      override def preColumnarTransitions: Rule[SparkPlan] = ParamLiterals
-    })
 }

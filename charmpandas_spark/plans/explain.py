@@ -10,6 +10,9 @@ assertable facts so tests (and humans) can verify:
 - a join was broadcast vs shuffled
 - how many exchanges (shuffles) a plan contains
 - whole-stage codegen coverage
+- how many files the scans read (``files_read``: the file-pruning
+  session extension drops files whose footer min/max exclude the
+  filter)
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ __all__ = [
     "num_exchanges",
     "join_strategies",
     "codegen_stage_count",
+    "files_read",
     "assert_pushdown",
     "assert_column_pruned",
     "plan_report",
@@ -100,6 +104,40 @@ def codegen_stage_count(df: SparkDF, execute: bool = False) -> int:
     return len(ids)
 
 
+def _plan_nodes(plan):
+    """Every node of a physical plan, through adaptive plans (their
+    current plan: the final one after an action), query stages,
+    reused exchanges and subqueries."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        yield node
+        if name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+        subqueries = node.subqueries()
+        stack.extend(subqueries.apply(i) for i in range(subqueries.size()))
+
+
+def files_read(df: SparkDF) -> int:
+    """Files the parquet/file scans of ``df``'s last execution read:
+    the sum of their "number of files read" metrics (0 before an
+    action). With the file-pruning extension it counts the files left
+    after footer pruning, without it every listed file."""
+    total = 0
+    for node in _plan_nodes(df._jdf.queryExecution().executedPlan()):  # noqa: SLF001
+        if node.getClass().getSimpleName() == "FileSourceScanExec":
+            metric = node.metrics().get("numFiles")
+            if metric.isDefined():
+                total += metric.get().value()
+    return total
+
+
 def assert_pushdown(df: SparkDF, fragment: str) -> None:
     """Assert some filter mentioning ``fragment`` reached the scan."""
     got = pushed_filters(df)
@@ -131,4 +169,5 @@ def plan_report(df: SparkDF, execute_for_codegen: bool = False) -> dict:
         "joins": join_strategies(df),
         "codegen_stages": codegen_stage_count(
             df, execute=execute_for_codegen),
+        "files_read": files_read(df),
     }

@@ -49,17 +49,46 @@ from the generated class's ``references`` array, as Spark already
 does for string and decimal literals; every value of one filter
 shape then reuses the compiled class. The rule runs after the scan
 took its pushed filters, so row-group and partition pruning and the
-``explain`` text are unchanged. The extension jar,
-``params-<key>.jar``, sits in the same cache directory, keyed on the
-archive's JDK and Spark jars and on the Scala source; a session
-without it compiles it at interpreter exit with the Scala compiler
-Spark ships (about 5 s, after the archive dump), and later sessions
-load it through ``spark.jars`` (not the classpath, which would stop
-the archive from mapping) and ``spark.sql.extensions``, joined after
-any values the caller set for those keys. It applies exactly when
-the archive does; a missing compiler, a failed compile (retried at
-the next session's exit) or a jar that is not the one built for this
-key gives a session without it.
+``explain`` text are unchanged.
+
+Parquet file pruning (the same extension): Spark's parquet reader
+skips row groups inside each task, so a range read of a clustered
+layout still lists, schedules and opens every file.
+``jvm/FilePruning.scala`` adds an optimizer rule that wraps the file
+listing (``InMemoryFileIndex``) of every parquet relation in a
+``PruningFileIndex``; at planning it drops each file in which no row
+group can match the scan's pushed filter by its footer min/max,
+judged with parquet-mr's statistics filter on the very predicate the
+reader builds (Spark's filter translation and ``ParquetFilters`` over
+the file's own footer schema, the session's pushdown confs and the
+footer's datetime rebase spec). A file is dropped only when the
+reader would skip all of it, so the rows are the same; the scan's
+"number of files read" metric and ``plans.explain.files_read`` show
+the pruned count, its "metadata time" the listing with the footer
+reads, and ``explain`` names ``PruningFileIndex`` as the scan's
+location. Footers are cached JVM-wide, least recently used out after
+1024, keyed on the file's path, length and modification time (to the
+nanosecond for local files), so a read after a rewrite reads the new
+footer. Nothing is pruned when ``spark.sql.parquet.filterPushdown``
+or ``parquet.filter.stats.enabled`` is off, when the scan has no data
+filter, or when the listing holds more than 256 files; a footer that
+cannot be read keeps its file, so Spark's own error or
+``ignoreCorruptFiles`` behaviour is unchanged. Catalog-tracked
+partitions (``CatalogFileIndex``), streaming sink output and every
+other format are left alone.
+
+The extension jar, ``params-<key>.jar``, holds both rules behind one
+``spark.sql.extensions`` entry point, ``charmpandas.spark.Extension``.
+It sits in the same cache directory, keyed on the archive's JDK and
+Spark jars and on every ``jvm/*.scala`` source; a session without it
+compiles it at interpreter exit with the Scala compiler Spark ships
+(5-10 s, after the archive dump), and later sessions load it through
+``spark.jars`` (not the classpath, which would stop the archive from
+mapping) and ``spark.sql.extensions``, joined after any values the
+caller set for those keys. It applies exactly when the archive does;
+a missing compiler, a failed compile (retried at the next session's
+exit) or a jar that is not the one built for this key gives a session
+without it, whose reads are unpruned and return the same rows.
 Deleting the directory resets it too.
 """
 
@@ -137,11 +166,12 @@ _CDS_DUMP_WAIT_S = 120
 _CDS_QUIET = "-Xlog:cds=off"
 
 
-#: Scala source of the session extension that passes filter
-#: comparison values to generated code by reference
-_PARAM_SOURCE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "jvm", "ParamLiterals.scala")
-_PARAM_EXTENSION = "charmpandas.spark.ParamLiteralExtension"
+#: Scala sources of the session extension: filter comparison values
+#: by reference and parquet file pruning
+_PARAM_SOURCES = sorted(glob.glob(os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "*.scala")))
+#: its one ``spark.sql.extensions`` entry point, which registers both
+_PARAM_EXTENSION = "charmpandas.spark.Extension"
 #: jar entry holding the jar's cache key; a jar without it, or without
 #: the extension class, is rebuilt
 _PARAM_STAMP = "charmpandas_spark.key"
@@ -219,12 +249,14 @@ def _cds_launch(master: str) -> _CdsLaunch | None:
         os.makedirs(conf_dir, exist_ok=True)
         if os.listdir(conf_dir) or not os.access(cache, os.W_OK):
             return None
-        with open(_PARAM_SOURCE, "rb") as f:
-            source = f.read()
+        param_key = hashlib.sha256(key.hexdigest().encode())
+        for p in _PARAM_SOURCES:
+            with open(p, "rb") as f:
+                param_key.update(b"\0%s\0%s" % (os.path.basename(p).encode(),
+                                                f.read()))
     except OSError:
         return None
-    param_key = hashlib.sha256(key.hexdigest().encode() + b"\0"
-                               + source).hexdigest()[:20]
+    param_key = param_key.hexdigest()[:20]
     archive = os.path.join(cache, f"spark-{key.hexdigest()[:20]}.jsa")
     jar_fields = (java, os.path.join(home, "jars"),
                   os.path.join(cache, f"params-{param_key}.jar"), param_key)
@@ -276,7 +308,7 @@ def _build_param_jar(proc, cds: _CdsLaunch) -> None:
             subprocess.run(
                 [cds.java, "-Xmx512m", "-cp",
                  os.path.join(cds.spark_jars, "*"), "scala.tools.nsc.Main",
-                 "-usejavacp", "-nowarn", "-d", out, _PARAM_SOURCE],
+                 "-usejavacp", "-nowarn", "-d", out, *_PARAM_SOURCES],
                 stdin=subprocess.DEVNULL, capture_output=True, check=True,
                 timeout=_PARAM_BUILD_WAIT_S)
             part = f"{cds.param_jar}.{os.getpid()}.tmp"

@@ -319,6 +319,21 @@ def read_parquet(
     read on its own and the parts are unioned by name (missing columns
     read as null).
 
+    File pruning: in a session with the extension that ``get_spark``
+    loads (``charmpandas_spark/session.py``), a filtered read plans
+    only the files whose footer min/max can match the pushed filter:
+    every other file is dropped at planning, before a task is
+    scheduled, by the reader's own row-group statistics test, so the
+    rows are those of an unpruned read. Footers are cached JVM-wide
+    (least recently used out after 1024), keyed on path, length and
+    modification time (nanoseconds for local files). It is off when
+    ``spark.sql.parquet.filterPushdown`` or
+    ``parquet.filter.stats.enabled`` is off, for a read with no data
+    filter and for a listing of more than 256 files; a session
+    without the extension (non-local master, a gateway already
+    running) reads every listed file. ``plans.explain.files_read``
+    counts the files a query's scans read.
+
     ``merge_schema``: reconcile EVOLVED schemas across files (a table
     appended to for months grows columns): Spark unions every file
     footer's fields; files missing a column read it as null. Off by
@@ -407,8 +422,12 @@ def write_clustered(
     row groups whose stats exclude the predicate. A hash-partitioned
     unsorted write scatters every key range across every file —
     stats cover everything, nothing prunes. After a clustered write,
-    a point/range predicate on the cluster key touches ~1 file and
-    ~1 row group instead of all of them. ``max_records_per_file``
+    a point/range predicate on the cluster key matches the row
+    groups of ~1 file. In a session with the extension ``get_spark``
+    loads, the other files are dropped whole at planning from their
+    footers (see :func:`read_parquet`), so the read schedules ~1
+    file in one task; without it every file is still listed and
+    opened by a task, which then skips its row groups. ``max_records_per_file``
     bounds file size for downstream listing/parallelism;
     ``partition_by`` composes directory-level partition pruning on
     low-cardinality keys with row-group pruning on high-cardinality

@@ -31,6 +31,70 @@ def built(tmp_path_factory):
 
 
 @pytest.fixture(scope="session")
+def jar_cache(built):
+    """The start-up cache of a first session, with the session-extension
+    jar it built."""
+    import glob
+
+    from pyspark.find_spark_home import _find_spark_home
+
+    if not glob.glob(os.path.join(_find_spark_home(), "jars",
+                                  "scala-compiler-*.jar")):
+        pytest.skip("Spark ships no Scala compiler to build the jar")
+    return built
+
+
+@pytest.fixture(scope="module")
+def sessions(jar_cache, tmp_path_factory):
+    """Two sessions in child processes answering requests (see
+    ``spark_child.SERVER``), one pair per test module: (with the
+    session extension, without it, the first's start-up message). The first maps the start-up cache a
+    first session built and also gets caller values for the two keys
+    the extension sets, which ``get_spark`` must join with its own;
+    the second starts plainly because its Spark conf dir holds a real
+    file. Both keep catalog tables under a temporary warehouse."""
+    import zipfile
+
+    from .spark_child import Server, child_env
+
+    tmp = tmp_path_factory.mktemp("ext_sessions")
+    caller_jar = tmp / "caller.jar"
+    with zipfile.ZipFile(caller_jar, "w") as z:
+        z.writestr("caller.txt", "caller's own jar")
+    conf = tmp / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text("spark.cps.test.marker yes\n")
+    on = Server(child_env(jar_cache[0]), {
+        "spark.jars": str(caller_jar),
+        "spark.sql.extensions": "org.example.CallerExtension",
+        "spark.sql.warehouse.dir": str(tmp / "warehouse_on")},
+        tmp / "on.log")
+    off = Server(child_env(tmp / "unused_cache", conf_dir=conf), {
+        "spark.sql.warehouse.dir": str(tmp / "warehouse_off")},
+        tmp / "off.log")
+    try:
+        hello, off_hello = on.receive(), off.receive()
+        assert off_hello["extensions"] is None
+        yield on, off, hello
+    finally:
+        on.close()
+        off.close()
+
+
+@pytest.fixture
+def no_gateway(monkeypatch, tmp_path):
+    """Launch rules as seen by a process with no JVM yet."""
+    from pyspark import SparkContext
+
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    for var in ("PYSPARK_GATEWAY_PORT", "SPARK_CONF_DIR",
+                "HADOOP_CONF_DIR", "YARN_CONF_DIR"):
+        monkeypatch.delenv(var, raising=False)
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    return monkeypatch
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
 

@@ -1,22 +1,20 @@
 """The session extension that passes filter comparison values to
 generated code by reference (``charmpandas_spark/jvm``).
 
-Two sessions run in child processes for the whole module: one maps
-the start-up cache that a first session built (class-data archive and
-extension jar), the other starts plainly because its Spark conf dir
-holds a real file. The in-process test session may or may not have
-the extension, depending on the user's cache, so it is not used here.
+Two sessions run in child processes for the whole module (the
+``sessions`` fixture): one maps the start-up cache that a first
+session built (class-data archive and extension jar), the other
+starts plainly because its Spark conf dir holds a real file. The
+in-process test session may or may not have the extension, depending
+on the user's cache, so it is not used here.
 """
 
 import datetime as dt
 import glob
-import json
 import math
 import os
 import re
 import shutil
-import subprocess
-import sys
 import zipfile
 
 import pyarrow as pa
@@ -26,137 +24,7 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 
 from charmpandas_spark import session
 
-from .spark_child import child_env, run_child
-
-SERVER = """
-import functools, json, sys
-import charmpandas_spark as cps
-from pyspark.sql import functions as F
-spark = cps.get_spark(master="local[2]", shuffle_partitions=2,
-                      extra_conf=json.loads(sys.argv[1]))
-compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \\
-    .METRIC_COMPILATION_TIME()
-utils = spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
-
-
-def ids(path, wheres):
-    # the ids each filter keeps, from one job over a union
-    df = cps.read_parquet(spark, path).sdf
-    parts = [df.where(w).select(F.lit(k).alias("k"), "id")
-             for k, w in enumerate(wheres)]
-    out = [[] for _ in wheres]
-    for k, i in functools.reduce(lambda a, b: a.unionAll(b), parts) \
-            .collect():
-        out[k].append(i)
-    return [sorted(o) for o in out]
-
-
-def handle(req):
-    if "where" in req:
-        pushed = ids(req["path"], req["where"])
-        spark.conf.set("spark.sql.parquet.filterPushdown", "false")
-        try:
-            return pushed, ids(req["path"], req["where"])
-        finally:
-            spark.conf.unset("spark.sql.parquet.filterPushdown")
-    if "compiles" in req:
-        out = []
-        for w in req["compiles"]:
-            before = compiles.getCount()
-            ids(req["path"], [w])
-            out.append(compiles.getCount() - before)
-        return out
-    spark.conf.set("spark.sql.adaptive.enabled", req["aqe"])
-    try:
-        df = cps.read_parquet(spark, req["path"]).sdf \
-            .where(req["explain"]).groupBy("qty").count()
-        if req["aqe"] == "true":  # the final plan, after its stages ran
-            df.collect()
-        return utils.explainString(df._jdf.queryExecution(), "formatted")
-    finally:
-        spark.conf.unset("spark.sql.adaptive.enabled")
-
-
-print("RESULT " + json.dumps({
-    "jars": spark.sparkContext.getConf().get("spark.jars", ""),
-    "extensions": spark.conf.get("spark.sql.extensions", None)}),
-    flush=True)
-for line in sys.stdin:
-    print("RESULT " + json.dumps(handle(json.loads(line))), flush=True)
-"""
-
-
-class Server:
-    """A session in a child process answering JSON requests."""
-
-    def __init__(self, env, extra_conf, log):
-        self.log = open(log, "w")
-        self.proc = subprocess.Popen(
-            [sys.executable, "-c", SERVER, json.dumps(extra_conf)],
-            env=env, stdin=subprocess.PIPE, stdout=subprocess.PIPE,
-            stderr=self.log, text=True)
-
-    def send(self, req):
-        self.proc.stdin.write(json.dumps(req) + "\n")
-        self.proc.stdin.flush()
-
-    def receive(self):
-        for line in self.proc.stdout:
-            if line.startswith("RESULT "):
-                return json.loads(line[len("RESULT "):])
-        raise AssertionError(
-            f"session exited: {open(self.log.name).read()[-3000:]}")
-
-    def close(self):
-        self.proc.stdin.close()
-        self.proc.wait(timeout=120)
-        self.log.close()
-
-
-def ask(servers, req):
-    """``req`` to every server at once; their answers in order."""
-    for s in servers:
-        s.send(req)
-    return [s.receive() for s in servers]
-
-
-@pytest.fixture(scope="module")
-def jar_cache(built):
-    """The start-up cache of a first session, with the jar it built."""
-    from pyspark.find_spark_home import _find_spark_home
-
-    if not glob.glob(os.path.join(_find_spark_home(), "jars",
-                                  "scala-compiler-*.jar")):
-        pytest.skip("Spark ships no Scala compiler to build the jar")
-    return built
-
-
-@pytest.fixture(scope="module")
-def sessions(jar_cache, tmp_path_factory):
-    """(with the extension, without it, the first's start-up message).
-    The first also gets caller values for the two keys the extension
-    sets, which ``get_spark`` must join with its own."""
-    tmp = tmp_path_factory.mktemp("param_sessions")
-    caller_jar = tmp / "caller.jar"
-    with zipfile.ZipFile(caller_jar, "w") as z:
-        z.writestr("caller.txt", "caller's own jar")
-    conf = tmp / "conf"
-    conf.mkdir()
-    (conf / "spark-defaults.conf").write_text("spark.cps.test.marker yes\n")
-    on = Server(child_env(jar_cache[0]), {
-        "spark.jars": str(caller_jar),
-        "spark.sql.extensions": "org.example.CallerExtension"},
-        tmp / "on.log")
-    off = Server(child_env(tmp / "unused_cache", conf_dir=conf), {},
-                 tmp / "off.log")
-    try:
-        hello, off_hello = on.receive(), off.receive()
-        assert off_hello["extensions"] is None
-        yield on, off, hello
-    finally:
-        on.close()
-        off.close()
-
+from .spark_child import ask, run_child
 
 def _jar(cache):
     """(path, key) of the one extension jar in ``cache``."""
@@ -336,12 +204,22 @@ def _masked(text):
     return re.sub(r"plan_id=\d+", "plan_id=", re.sub(r"#\d+L?", "#", text))
 
 
+def _pushed(text):
+    return re.findall(r"PushedFilters: \[(.*)\]", text)
+
+
 @pytest.mark.parametrize("aqe", ["false", "true"])
 def test_explain_text_is_unchanged(sessions, lineitem_like, aqe):
     req = {"path": lineitem_like, "explain": _window("1994-03-01", 11, 2.5),
            "aqe": aqe}
     got, plain = ask(sessions[:2], req)
-    got = _masked(got)
+    # the extension's file pruning wraps the scan's file index, which
+    # renames the class in the Location line and nothing else
+    assert "Location: PruningFileIndex [" in got
+    assert "Location: InMemoryFileIndex [" in plain
+    assert _pushed(got) == _pushed(plain)
+    got = _masked(got).replace("Location: PruningFileIndex [",
+                               "Location: InMemoryFileIndex [")
     assert got == _masked(plain)
     assert ("isFinalPlan=true" in got) == (aqe == "true")
     assert "Condition : " in got and "(qty# < 11)" in got

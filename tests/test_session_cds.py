@@ -62,19 +62,6 @@ def test_conf_dir_with_real_files_skips_cds(tmp_path):
     assert out["shuffle_partitions"] == str(out["cpu_count"])
 
 
-@pytest.fixture
-def no_gateway(monkeypatch, tmp_path):
-    """Launch rules as seen by a process with no JVM yet."""
-    from pyspark import SparkContext
-
-    monkeypatch.setattr(SparkContext, "_gateway", None)
-    for var in ("PYSPARK_GATEWAY_PORT", "SPARK_CONF_DIR",
-                "HADOOP_CONF_DIR", "YARN_CONF_DIR"):
-        monkeypatch.delenv(var, raising=False)
-    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
-    return monkeypatch
-
-
 def test_launch_rules(no_gateway, tmp_path):
     from pyspark import SparkContext
 
